@@ -590,9 +590,9 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
     slowest = sorted(results.items(), key=lambda kv: -kv[1])
-    n_slow = 10
-    while n_slow >= 0:
-        compact = {
+
+    def compact(n_slow: int) -> dict:
+        return {
             "metric": "cdc_merge_apply_replay_sec",
             "value": round(headline_wall, 3),
             "unit": "sec",
@@ -626,11 +626,24 @@ def main() -> None:
             "queries_timed": len(results),
             "detail_file": os.path.basename(detail_path),
         }
-        line = json.dumps(compact, separators=(",", ":"))
+
+    print(stdout_line(compact, os.path.basename(detail_path)))
+
+
+def stdout_line(compact, detail_file: str) -> str:
+    """The final stdout line: ``compact(n_slow)`` with the most slowest-
+    query timings that fits in 1500 chars, else a minimal fixed-field
+    line (metric/value/detail_file) that always fits — a reader keeping
+    only the tail of stdout must never get a truncated line."""
+    for n_slow in range(10, -1, -1):
+        line = json.dumps(compact(n_slow), separators=(",", ":"))
         if len(line) <= 1500:
-            break
-        n_slow -= 1
-    print(line)
+            return line
+    full = compact(0)
+    return json.dumps(
+        {"metric": full["metric"], "value": full["value"], "detail_file": detail_file},
+        separators=(",", ":"),
+    )
 
 
 if __name__ == "__main__":

@@ -1,17 +1,20 @@
-"""Avro Object Container File writer/reader — pure Python, no jar.
+"""Avro binary codec and Object Container Files — pure Python, no jar.
 
-pyspark 4.1.2 ships without the spark-avro module and this environment has
-no avro/fastavro package, so ``--as-avrodatafile`` parity is implemented
-against the public Avro 1.11 specification directly:
+pyspark ships without the spark-avro module and no avro/fastavro package
+is a dependency, so Avro is implemented against the public Avro 1.11
+specification directly — once, for both of its users: the Sqoop
+``--as-avrodatafile`` export (flat records of ``["null", T]`` unions) and
+the Iceberg metadata export (lake/iceberg_export.py: nested records,
+arrays and maps).
 
-- container layout: magic ``Obj\\x01`` → file-metadata map
-  (``avro.schema`` JSON + ``avro.codec``) → 16-byte sync marker → data
-  blocks of (object count, byte size, serialized objects) each followed
-  by the sync marker;
-- binary encoding: zigzag-varint ints/longs, little-endian IEEE
-  float/double, length-prefixed bytes/strings, union index + value
-  (every Sqoop field is ``["null", T]``, AvroSchemaGenerator's nullable
-  columns), 0-terminated blocks for arrays;
+- binary encoding (:func:`encoder` / :func:`decoder`, compiled once per
+  schema): zigzag-varint ints/longs, little-endian IEEE float/double,
+  length-prefixed bytes/strings, union index + value, records as their
+  fields in order, count-prefixed 0-terminated blocks for arrays/maps;
+- container layout (:func:`write_avro` / :func:`read_avro`): magic
+  ``Obj\\x01`` → file-metadata map (``avro.schema`` JSON + ``avro.codec``
+  + caller entries) → 16-byte sync marker → data blocks of (object count,
+  byte size, serialized objects) each followed by the sync marker;
 - codecs: ``null`` and ``deflate`` (raw zlib, spec-mandated -15 wbits).
 
 Value semantics come from ``sqoop_spark.avro`` (AvroUtil.toAvro parity:
@@ -31,12 +34,14 @@ sets the throughput ceiling.
 
 from __future__ import annotations
 
+import hashlib
 import io
+import itertools
 import json
 import os
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -45,6 +50,8 @@ from sqoop_spark.errors import EngineError
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
+_CODECS = ("null", "deflate")
+_META_SCHEMA = {"type": "map", "values": "bytes"}
 
 _SPARK_TO_AVRO = {
     T.BooleanType: "boolean",
@@ -60,11 +67,11 @@ _SPARK_TO_AVRO = {
 
 
 # ---------------------------------------------------------------------------
-# binary encoding primitives (Avro spec §"Binary Encoding")
+# binary encoding (Avro spec §"Binary Encoding")
 # ---------------------------------------------------------------------------
 
 
-def write_long(out: io.BytesIO, n: int) -> None:
+def write_long(out, n: int) -> None:
     """Zigzag + base-128 varint (spec: int/long encoding). Python's
     arbitrary-precision xor realizes zigzag directly: for negative n,
     (n << 1) ^ (n >> 63) is the bitwise NOT of 2n — always non-negative."""
@@ -79,7 +86,7 @@ def write_long(out: io.BytesIO, n: int) -> None:
             return
 
 
-def read_long(buf: io.BufferedIOBase) -> int:
+def read_long(buf) -> int:
     shift, u = 0, 0
     while True:
         (b,) = buf.read(1)
@@ -90,51 +97,133 @@ def read_long(buf: io.BufferedIOBase) -> int:
     return (u >> 1) ^ -(u & 1)
 
 
-def write_bytes(out: io.BytesIO, b: bytes) -> None:
+def write_bytes(out, b: bytes) -> None:
     write_long(out, len(b))
     out.write(b)
 
 
-def read_bytes(buf: io.BufferedIOBase) -> bytes:
+def read_bytes(buf) -> bytes:
     return buf.read(read_long(buf))
 
 
-def _encoder_for(dtype: T.DataType):
-    """Value encoder for one Spark type (pre-converted by
-    avro_record_frame — temporals/decimals never reach here)."""
-    if isinstance(dtype, T.BooleanType):
-        return lambda out, v: out.write(b"\x01" if v else b"\x00")
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return write_long
-    if isinstance(dtype, T.FloatType):
-        return lambda out, v: out.write(struct.pack("<f", v))
-    if isinstance(dtype, T.DoubleType):
-        return lambda out, v: out.write(struct.pack("<d", v))
-    if isinstance(dtype, T.StringType):
-        return lambda out, v: write_bytes(out, v.encode("utf-8"))
-    if isinstance(dtype, T.BinaryType):
-        return lambda out, v: write_bytes(out, bytes(v))
-    raise EngineError(
-        f"avro container: unsupported Spark type {dtype.simpleString()} — "
-        "run avro_record_frame first (temporals→epoch millis, "
-        "decimals→strings per AvroUtil.toAvro)"
-    )
+def _long_bytes(n: int) -> bytes:
+    out = io.BytesIO()
+    write_long(out, n)
+    return out.getvalue()
 
 
-def _decoder_for(avro_type: str):
-    if avro_type == "boolean":
-        return lambda buf: buf.read(1) == b"\x01"
-    if avro_type in ("int", "long"):
-        return read_long
-    if avro_type == "float":
-        return lambda buf: struct.unpack("<f", buf.read(4))[0]
-    if avro_type == "double":
-        return lambda buf: struct.unpack("<d", buf.read(8))[0]
-    if avro_type == "string":
-        return lambda buf: read_bytes(buf).decode("utf-8")
-    if avro_type == "bytes":
-        return read_bytes
-    raise EngineError(f"avro container: unsupported Avro type {avro_type!r}")
+_ENCODE = {
+    "boolean": lambda out, v: out.write(b"\x01" if v else b"\x00"),
+    "int": write_long,
+    "long": write_long,
+    "float": lambda out, v: out.write(struct.pack("<f", v)),
+    "double": lambda out, v: out.write(struct.pack("<d", v)),
+    "string": lambda out, v: write_bytes(out, v.encode("utf-8")),
+    "bytes": lambda out, v: write_bytes(out, bytes(v)),
+}
+
+_DECODE = {
+    "boolean": lambda buf: buf.read(1) == b"\x01",
+    "int": read_long,
+    "long": read_long,
+    "float": lambda buf: struct.unpack("<f", buf.read(4))[0],
+    "double": lambda buf: struct.unpack("<d", buf.read(8))[0],
+    "string": lambda buf: read_bytes(buf).decode("utf-8"),
+    "bytes": read_bytes,
+}
+
+
+def encoder(schema):
+    """Compile an Avro schema (parsed JSON) into ``encode(out, value)``.
+    A record takes a dict (fields by name) or a sequence such as a Spark
+    Row (fields by position); a union writes ``None`` as its ``"null"``
+    branch and any other value as its first non-null branch."""
+    if isinstance(schema, list):
+        i = next(i for i, b in enumerate(schema) if b != "null")
+        tag, enc = _long_bytes(i), encoder(schema[i])
+        null_tag = _long_bytes(schema.index("null"))
+
+        def union(out, v):
+            if v is None:
+                out.write(null_tag)
+            else:
+                out.write(tag)
+                enc(out, v)
+
+        return union
+    t = schema["type"] if isinstance(schema, dict) else schema
+    if t == "record":
+        fields = [(f["name"], encoder(f["type"])) for f in schema["fields"]]
+
+        def record(out, v):
+            if isinstance(v, dict):
+                for name, enc in fields:
+                    enc(out, v[name])
+            else:
+                for (_, enc), x in zip(fields, v):
+                    enc(out, x)
+
+        return record
+    if t in ("array", "map"):
+        item = encoder(schema["items"] if t == "array" else schema["values"])
+
+        def blocks(out, v):
+            if v:
+                write_long(out, len(v))
+                if t == "array":
+                    for x in v:
+                        item(out, x)
+                else:
+                    for k, x in v.items():
+                        write_bytes(out, k.encode("utf-8"))
+                        item(out, x)
+            write_long(out, 0)
+
+        return blocks
+    if t not in _ENCODE:
+        raise EngineError(f"avro encode: unsupported type {schema!r}")
+    return _ENCODE[t]
+
+
+def decoder(schema):
+    """Compile an Avro schema into ``decode(buf) -> value``: records
+    decode to dicts in field order, arrays to lists, maps to dicts."""
+    if isinstance(schema, list):
+        branches = [None if b == "null" else decoder(b) for b in schema]
+
+        def union(buf):
+            dec = branches[read_long(buf)]
+            return None if dec is None else dec(buf)
+
+        return union
+    t = schema["type"] if isinstance(schema, dict) else schema
+    if t == "record":
+        fields = [(f["name"], decoder(f["type"])) for f in schema["fields"]]
+        return lambda buf: {name: dec(buf) for name, dec in fields}
+    if t in ("array", "map"):
+        if t == "array":
+            item = decoder(schema["items"])
+        else:
+            value = decoder(schema["values"])
+
+            def item(buf):
+                return read_bytes(buf).decode("utf-8"), value(buf)
+
+        def blocks(buf):
+            while True:
+                n = read_long(buf)
+                if n == 0:
+                    return
+                if n < 0:  # negative block count: byte size follows (spec)
+                    read_long(buf)
+                    n = -n
+                for _ in range(n):
+                    yield item(buf)
+
+        return lambda buf: (list if t == "array" else dict)(blocks(buf))
+    if t not in _DECODE:
+        raise EngineError(f"avro decode: unsupported type {schema!r}")
+    return _DECODE[t]
 
 
 # ---------------------------------------------------------------------------
@@ -164,64 +253,77 @@ def avro_schema_for(schema: T.StructType, name: str = "sqoop_import") -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _write_container(
+def write_avro(
     path: str,
-    rows: Iterator[Any],
-    schema: T.StructType,
-    avro_schema: dict,
-    codec: str,
-    sync: bytes,
-    objects_per_block: int,
+    schema,
+    records: Iterable[Any],
+    sync: bytes | None = None,
+    meta: dict | None = None,
+    codec: str = "null",
+    objects_per_block: int = 4096,
 ) -> int:
-    encoders = [_encoder_for(f.dataType) for f in schema.fields]
-    ncols = len(schema.fields)
-    n_rows = 0
+    """Write ``records`` as one Object Container File at ``path``; returns
+    the record count. ``meta`` entries follow ``avro.schema`` and
+    ``avro.codec`` in the file-metadata map. ``sync`` defaults to a marker
+    derived from the schema, so identical input gives identical bytes.
+    Records stream in blocks of at most ``objects_per_block``."""
+    if codec not in _CODECS:
+        raise EngineError(f"avro container: unsupported codec {codec!r}")
+    schema_json = json.dumps(schema)
+    if sync is None:
+        sync = hashlib.sha256(schema_json.encode()).digest()[:SYNC_SIZE]
+    pairs = {"avro.schema": schema_json, "avro.codec": codec, **(meta or {})}
+    enc = encoder(schema)
+    rows = iter(records)
+    n = 0
     with open(path, "wb") as fh:
         fh.write(MAGIC)
-        meta = io.BytesIO()
-        write_long(meta, 2)
-        write_bytes(meta, b"avro.schema")
-        write_bytes(meta, json.dumps(avro_schema).encode())
-        write_bytes(meta, b"avro.codec")
-        write_bytes(meta, codec.encode())
-        write_long(meta, 0)
-        fh.write(meta.getvalue())
+        encoder(_META_SCHEMA)(
+            fh, {k: v.encode() if isinstance(v, str) else v for k, v in pairs.items()}
+        )
         fh.write(sync)
-
-        block = io.BytesIO()
-        count = 0
-
-        def flush():
-            nonlocal count
-            if not count:
-                return
+        while chunk := list(itertools.islice(rows, objects_per_block)):
+            block = io.BytesIO()
+            for r in chunk:
+                enc(block, r)
             data = block.getvalue()
             if codec == "deflate":
                 data = zlib.compress(data)[2:-4]  # raw deflate (spec: -15 wbits)
-            hdr = io.BytesIO()
-            write_long(hdr, count)
-            write_long(hdr, len(data))
-            fh.write(hdr.getvalue())
+            write_long(fh, len(chunk))
+            write_long(fh, len(data))
             fh.write(data)
             fh.write(sync)
-            block.seek(0)
-            block.truncate()
-            count = 0
+            n += len(chunk)
+    return n
 
-        for row in rows:
-            for i in range(ncols):
-                v = row[i]
-                if v is None:
-                    write_long(block, 0)  # union branch "null"
-                else:
-                    write_long(block, 1)  # union branch T
-                    encoders[i](block, v)
-            count += 1
-            n_rows += 1
-            if count >= objects_per_block:
-                flush()
-        flush()
-    return n_rows
+
+def read_avro(path: str) -> tuple[Any, dict[str, bytes], list]:
+    """(schema, file metadata, records) of one Object Container File
+    written by any spec-conformant writer; validates the magic, the
+    metadata map and every block's sync marker."""
+    with open(path, "rb") as fh:
+        if fh.read(4) != MAGIC:
+            raise EngineError(f"{path}: not an Avro object container file")
+        meta = decoder(_META_SCHEMA)(fh)
+        sync = fh.read(SYNC_SIZE)
+        body = fh.read()
+    schema = json.loads(meta["avro.schema"])
+    codec = meta.get("avro.codec", b"null").decode() or "null"
+    if codec not in _CODECS:
+        raise EngineError(f"{path}: unsupported codec {codec!r}")
+    dec = decoder(schema)
+    buf = io.BytesIO(body)
+    records: list = []
+    while buf.tell() < len(body):
+        count = read_long(buf)
+        data = buf.read(read_long(buf))
+        if codec == "deflate":
+            data = zlib.decompress(data, wbits=-15)
+        if buf.read(SYNC_SIZE) != sync:
+            raise EngineError(f"{path}: sync marker mismatch (corrupt block)")
+        block = io.BytesIO(data)
+        records.extend(dec(block) for _ in range(count))
+    return schema, meta, records
 
 
 def write_avro_container(
@@ -239,7 +341,7 @@ def write_avro_container(
     value semantics + identifier cleaning); the sync marker is derived
     from the schema and partition id — deterministic output for identical
     input."""
-    if codec not in ("null", "deflate"):
+    if codec not in _CODECS:
         raise EngineError(f"avro container: unsupported codec {codec!r}")
     if convert:
         from sqoop_spark.avro import avro_record_frame
@@ -257,20 +359,17 @@ def write_avro_container(
     schema_json = json.dumps(avro_schema)
 
     def run(rows):
-        import hashlib
-
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         sync = hashlib.sha256(f"{schema_json}|{pid}".encode()).digest()[:SYNC_SIZE]
-        _write_container(
+        write_avro(
             os.path.join(path, f"part-{pid:05d}.avro"),
-            rows,
-            schema,
             avro_schema,
-            codec,
-            sync,
-            objects_per_block,
+            rows,
+            sync=sync,
+            codec=codec,
+            objects_per_block=objects_per_block,
         )
 
     df.foreachPartition(run)
@@ -279,69 +378,21 @@ def write_avro_container(
 
 
 def read_avro_file(path: str) -> tuple[dict, list[tuple]]:
-    """Read one container file → (avro schema, rows as tuples). The
-    round-trip half used by tests and the import side of ``eval``-style
-    inspection; validates magic, metadata map, per-block sync markers."""
-    with open(path, "rb") as fh:
-        if fh.read(4) != MAGIC:
-            raise EngineError(f"{path}: not an Avro object container file")
-        meta: dict[str, bytes] = {}
-        while True:
-            n = read_long(fh)
-            if n == 0:
-                break
-            if n < 0:  # negative block count: size follows (spec)
-                read_long(fh)
-                n = -n
-            for _ in range(n):
-                k = read_bytes(fh).decode()
-                meta[k] = read_bytes(fh)
-        avro_schema = json.loads(meta["avro.schema"])
-        codec = meta.get("avro.codec", b"null").decode()
-        sync = fh.read(SYNC_SIZE)
-        decoders = []
-        for f in avro_schema["fields"]:
-            t = f["type"]
-            branches = t if isinstance(t, list) else [t]
-            nonnull = [b for b in branches if b != "null"][0]
-            decoders.append((branches, _decoder_for(nonnull)))
-        rows: list[tuple] = []
-        while True:
-            first = fh.read(1)
-            if not first:
-                break
-            fh.seek(-1, 1)
-            count = read_long(fh)
-            size = read_long(fh)
-            data = fh.read(size)
-            if codec == "deflate":
-                data = zlib.decompress(data, wbits=-15)
-            if fh.read(SYNC_SIZE) != sync:
-                raise EngineError(f"{path}: sync marker mismatch (corrupt block)")
-            buf = io.BytesIO(data)
-            for _ in range(count):
-                vals = []
-                for branches, dec in decoders:
-                    if len(branches) > 1:
-                        idx = read_long(buf)
-                        vals.append(None if branches[idx] == "null" else dec(buf))
-                    else:
-                        vals.append(dec(buf))
-                rows.append(tuple(vals))
-        return avro_schema, rows
+    """Read one container file → (avro schema, rows as tuples) — the
+    round-trip half used by tests and ``eval``-style inspection."""
+    schema, _, records = read_avro(path)
+    return schema, [tuple(r.values()) for r in records]
 
 
 def read_avro_container(path: str) -> tuple[dict, list[tuple]]:
     """Read every part file of a container directory (or a single file)."""
     if os.path.isfile(path):
         return read_avro_file(path)
-    schema = None
-    rows: list[tuple] = []
-    for entry in sorted(os.listdir(path)):
-        if entry.endswith(".avro"):
-            s, r = read_avro_file(os.path.join(path, entry))
-            schema = schema or s
-            rows.extend(r)
-    if schema is None:
+    parts = [
+        read_avro_file(os.path.join(path, e))
+        for e in sorted(os.listdir(path))
+        if e.endswith(".avro")
+    ]
+    if not parts:
         raise EngineError(f"{path}: no .avro part files")
-    return schema, rows
+    return parts[0][0], [row for _, rows in parts for row in rows]

@@ -644,25 +644,18 @@ def merge_apply(
         # Still fence the empty batch for exactly-once. An empty commit
         # changes no buckets, so a lost race is ALWAYS rebasable — honor
         # the same retry budget as the non-empty path.
-        from sqoop_spark.errors import ConcurrentCommitError
-
-        attempt = 0
-        while True:
+        def commit_empty() -> dict:
             empty = table.manifest()
-            try:
-                table._commit(
-                    "merge",
-                    empty["files"],
-                    batch_id,
-                    {**(extra_summary or {}), "empty": True},
-                    {"batch_id": batch_id, "buckets": [], "counters": {}},
-                    base=empty,
-                )
-                break
-            except ConcurrentCommitError:
-                if attempt >= commit_retry_disjoint:
-                    raise
-                attempt += 1
+            return table._commit(
+                "merge",
+                empty["files"],
+                batch_id,
+                {**(extra_summary or {}), "empty": True},
+                {"batch_id": batch_id, "buckets": [], "counters": {}},
+                base=empty,
+            )
+
+        table._retrying(commit_retry_disjoint, commit_empty)
         return MergeStats(batch_id, 0, 0, 0, 0, 0, 0, table.num_buckets)
 
     # Old-side logical row count observed in the same pass (manifest sums

@@ -97,6 +97,8 @@ def resolve_password(args) -> str | None:
             "--password-alias can be specified."
         )
     alias = getattr(args, "password_alias", None)
+    if alias == "":
+        raise SystemExit("Error: --password-alias needs a non-empty alias.")
     if alias:
         from sqoop_spark.credentials import (
             CredentialError,

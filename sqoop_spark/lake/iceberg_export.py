@@ -31,7 +31,8 @@ Spec-compliance notes (Iceberg Table Spec, format-version 2):
   partition spec would let readers prune files wrongly. Unpartitioned
   metadata trades pruning for correctness.
 - timestamps are written by the engine as TIMESTAMP_MICROS int64 parquet
-  (never INT96, which Iceberg forbids — see session.py).
+  (never INT96, which Iceberg forbids — see session.py); a snapshot that
+  still references INT96 files is refused, one footer checked per write.
 - MoR state must be compacted first: Iceberg v2 delete files use
   position/equality-delete semantics this engine's order-column
   resolution does not map onto; :func:`export_iceberg` raises on
@@ -40,29 +41,23 @@ Spec-compliance notes (Iceberg Table Spec, format-version 2):
 This environment ships no Iceberg reader (pyspark 4.1.2 has no
 iceberg-runtime jar, DuckDB's iceberg extension cannot be downloaded), so
 the round-trip verification reads the export back through
-:func:`read_data_files` — a generic schema-driven Avro binary decoder
-(shared primitives with ``avro_container.py``, which is pytest-pinned
-against the Avro spec) — and value-hash-compares the files it lists
-against the live table (driver query ``iceberg_export_roundtrip``).
+:func:`read_data_files` — over the one schema-driven Avro codec and
+container reader/writer in ``avro_container.py`` (pytest-pinned against
+the Avro spec and byte-pinned on the Sqoop export) — and value-hash-
+compares the files it lists against the live table (contract query
+``iceberg_export_roundtrip``).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
-import struct
 import time
 import uuid
 
-from sqoop_spark.avro_container import (
-    MAGIC,
-    SYNC_SIZE,
-    read_bytes,
-    read_long,
-    write_bytes,
-    write_long,
-)
+import pyarrow.parquet as pq
+
+from sqoop_spark.avro_container import read_avro, write_avro
 from sqoop_spark.errors import EngineError
 
 # ---------------------------------------------------------------------------
@@ -131,176 +126,6 @@ def iceberg_schema(manifest: dict) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# minimal Avro writer/reader driven by a schema dict
-#
-# avro_container.py encodes flat nullable-union records (the Sqoop export
-# shape); Iceberg manifests need nested records, so this pair handles the
-# general record/union/array/map/primitive subset of the Avro spec. The
-# binary primitives (zigzag varints, length-prefixed bytes, container
-# framing) are the ones already pinned by tests/test_avro.py.
-# ---------------------------------------------------------------------------
-
-
-def _encode(schema, value, out: io.BytesIO) -> None:
-    if isinstance(schema, list):  # union: branch index + value
-        branch = 0 if value is None else next(
-            i for i, b in enumerate(schema) if b != "null"
-        )
-        write_long(out, branch)
-        if value is not None:
-            _encode(schema[branch], value, out)
-        return
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            for f in schema["fields"]:
-                _encode(f["type"], value[f["name"]], out)
-            return
-        if t == "array":
-            if value:
-                write_long(out, len(value))
-                for v in value:
-                    _encode(schema["items"], v, out)
-            write_long(out, 0)
-            return
-        if t == "map":
-            if value:
-                write_long(out, len(value))
-                for k, v in value.items():
-                    write_bytes(out, k.encode())
-                    _encode(schema["values"], v, out)
-            write_long(out, 0)
-            return
-        raise EngineError(f"avro encode: unsupported complex type {t!r}")
-    if schema in ("int", "long"):
-        write_long(out, value)
-    elif schema == "string":
-        write_bytes(out, value.encode())
-    elif schema == "bytes":
-        write_bytes(out, bytes(value))
-    elif schema == "boolean":
-        out.write(b"\x01" if value else b"\x00")
-    elif schema == "float":
-        out.write(struct.pack("<f", value))
-    elif schema == "double":
-        out.write(struct.pack("<d", value))
-    else:
-        raise EngineError(f"avro encode: unsupported type {schema!r}")
-
-
-def _decode(schema, buf: io.BytesIO):
-    if isinstance(schema, list):
-        branch = schema[read_long(buf)]
-        return None if branch == "null" else _decode(branch, buf)
-    if isinstance(schema, dict):
-        t = schema["type"]
-        if t == "record":
-            return {f["name"]: _decode(f["type"], buf) for f in schema["fields"]}
-        if t == "array":
-            out = []
-            while True:
-                n = read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:
-                    read_long(buf)  # block byte size, unused
-                    n = -n
-                for _ in range(n):
-                    out.append(_decode(schema["items"], buf))
-        if t == "map":
-            out = {}
-            while True:
-                n = read_long(buf)
-                if n == 0:
-                    return out
-                if n < 0:
-                    read_long(buf)
-                    n = -n
-                for _ in range(n):
-                    k = read_bytes(buf).decode()
-                    out[k] = _decode(schema["values"], buf)
-        raise EngineError(f"avro decode: unsupported complex type {t!r}")
-    if schema in ("int", "long"):
-        return read_long(buf)
-    if schema == "string":
-        return read_bytes(buf).decode()
-    if schema == "bytes":
-        return read_bytes(buf)
-    if schema == "boolean":
-        return buf.read(1) == b"\x01"
-    if schema == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if schema == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    raise EngineError(f"avro decode: unsupported type {schema!r}")
-
-
-def _write_avro(path: str, schema: dict, records: list[dict], meta: dict) -> int:
-    """One single-block Avro object container file; returns byte length."""
-    import hashlib
-
-    sync = hashlib.sha256(json.dumps(schema).encode()).digest()[:SYNC_SIZE]
-    body = io.BytesIO()
-    for r in records:
-        _encode(schema, r, body)
-    with open(path, "wb") as fh:
-        fh.write(MAGIC)
-        m = io.BytesIO()
-        pairs = {"avro.schema": json.dumps(schema), "avro.codec": "null", **meta}
-        write_long(m, len(pairs))
-        for k, v in pairs.items():
-            write_bytes(m, k.encode())
-            write_bytes(m, v.encode() if isinstance(v, str) else v)
-        write_long(m, 0)
-        fh.write(m.getvalue())
-        fh.write(sync)
-        blk = io.BytesIO()
-        write_long(blk, len(records))
-        write_long(blk, len(body.getvalue()))
-        fh.write(blk.getvalue())
-        fh.write(body.getvalue())
-        fh.write(sync)
-    return os.path.getsize(path)
-
-
-def read_avro(path: str) -> tuple[dict, dict, list[dict]]:
-    """(schema, file-metadata, records) of a container written by any
-    spec-conformant writer of the record/union/array/map subset."""
-    with open(path, "rb") as fh:
-        if fh.read(4) != MAGIC:
-            raise EngineError(f"{path}: not an Avro object container file")
-        meta: dict[str, bytes] = {}
-        while True:
-            n = read_long(fh)
-            if n == 0:
-                break
-            if n < 0:
-                read_long(fh)
-                n = -n
-            for _ in range(n):
-                k = read_bytes(fh).decode()
-                meta[k] = read_bytes(fh)
-        schema = json.loads(meta["avro.schema"])
-        if meta.get("avro.codec", b"null") not in (b"null", b""):
-            raise EngineError(f"{path}: unsupported codec for metadata read")
-        sync = fh.read(SYNC_SIZE)
-        records: list[dict] = []
-        while True:
-            first = fh.read(1)
-            if not first:
-                break
-            fh.seek(-1, 1)
-            count = read_long(fh)
-            size = read_long(fh)
-            buf = io.BytesIO(fh.read(size))
-            if fh.read(SYNC_SIZE) != sync:
-                raise EngineError(f"{path}: sync marker mismatch")
-            for _ in range(count):
-                records.append(_decode(schema, buf))
-        return schema, meta, records
-
-
-# ---------------------------------------------------------------------------
 # Iceberg manifest schemas (Table Spec, "Manifests" / "Manifest Lists"
 # tables; field ids from the spec are carried as field-id properties)
 # ---------------------------------------------------------------------------
@@ -360,6 +185,34 @@ _MANIFEST_FILE_SCHEMA = {
 # ---------------------------------------------------------------------------
 
 
+def _refuse_int96(table, manifest: dict, entries: list[dict]) -> None:
+    """Raise if a timestamp-bearing snapshot references INT96 parquet —
+    tables written before lake writes pinned TIMESTAMP_MICROS, or under a
+    foreign session conf, may hold it, and the Iceberg spec forbids it.
+    Every file of one write (its ``data/<uuid>`` directory) shares one
+    physical schema, so one footer per file set decides."""
+    if not any(
+        _PRIMITIVES.get(f["type"].strip().lower(), "").startswith("timestamp")
+        for f in manifest["schema"]["fields"]
+    ):
+        return
+    seen: set[str] = set()
+    for e in entries:
+        file_set = os.path.join(*e["path"].split(os.sep)[:2])
+        if file_set in seen:
+            continue
+        seen.add(file_set)
+        schema = pq.read_metadata(os.path.join(table.path, e["path"])).schema
+        if any(
+            schema.column(i).physical_type == "INT96" for i in range(len(schema))
+        ):
+            raise EngineError(
+                f"export_iceberg: {file_set} stores INT96 timestamps, which "
+                "Iceberg forbids; rewrite the base files first "
+                "(rewrite_clustered() writes TIMESTAMP_MICROS)"
+            )
+
+
 def export_iceberg(table, dest: str | None = None, version: int | None = None) -> str:
     """Write Iceberg v2 metadata for ``table``'s snapshot at ``version``
     (default: current) under ``dest`` (default: ``<table>/iceberg``).
@@ -375,6 +228,7 @@ def export_iceberg(table, dest: str | None = None, version: int | None = None) -
             "delete-file semantics do not express order-column resolution; "
             "run compact() first"
         )
+    _refuse_int96(table, m, entries)
     meta_dir = os.path.join(dest, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
 
@@ -406,11 +260,11 @@ def export_iceberg(table, dest: str | None = None, version: int | None = None) -
         total_rows += int(e["rows"])
     schema_json = json.dumps(iceberg_schema(m))
     manifest_path = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
-    mlen = _write_avro(
+    write_avro(
         manifest_path,
         _MANIFEST_ENTRY_SCHEMA,
         records,
-        {
+        meta={
             "schema": schema_json,
             "schema-id": "0",
             "partition-spec": "[]",
@@ -424,13 +278,13 @@ def export_iceberg(table, dest: str | None = None, version: int | None = None) -
     mlist_path = os.path.join(
         meta_dir, f"snap-{snapshot_id}-1-{uuid.uuid4().hex}.avro"
     )
-    _write_avro(
+    write_avro(
         mlist_path,
         _MANIFEST_FILE_SCHEMA,
         [
             {
                 "manifest_path": os.path.abspath(manifest_path),
-                "manifest_length": mlen,
+                "manifest_length": os.path.getsize(manifest_path),
                 "partition_spec_id": 0,
                 "content": 0,
                 "sequence_number": seq,
@@ -444,7 +298,7 @@ def export_iceberg(table, dest: str | None = None, version: int | None = None) -
                 "deleted_rows_count": 0,
             }
         ],
-        {"format-version": "2", "snapshot-id": str(snapshot_id)},
+        meta={"format-version": "2", "snapshot-id": str(snapshot_id)},
     )
 
     doc = {

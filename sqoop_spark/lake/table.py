@@ -1226,6 +1226,23 @@ class LakeTable:
         self._write_manifest(new)
         return new
 
+    @staticmethod
+    def _retrying(n: int, attempt_fn):
+        """Run ``attempt_fn()`` and re-run it on ``ConcurrentCommitError``,
+        at most ``n`` more times — the one optimistic-retry loop behind
+        every commit that can lose the manifest race. What a re-attempt
+        re-reads is the attempt's own business: append-shaped commits
+        rebase their written files onto the winner, base-pinned rewrites
+        (:meth:`_rewrite`) recompute from the fresh manifest."""
+        attempt = 0
+        while True:
+            try:
+                return attempt_fn()
+            except ConcurrentCommitError:
+                if attempt >= n:
+                    raise
+                attempt += 1
+
     def _commit_append_shaped(
         self,
         operation: str,
@@ -1236,23 +1253,23 @@ class LakeTable:
         retry_conflicts: int,
         num_buckets: int,
     ) -> dict:
-        """Optimistic rebase-and-retry for APPEND-SHAPED commits (Iceberg's
-        fast-append retry): the new data files are already on disk and
-        reference no prior state, so losing the manifest race to another
-        writer is recoverable — re-read the winner's manifest and re-attach
-        OUR entries to ITS file list. The exactly-once fence is re-checked
-        each attempt (if the winner fenced our batch id, the retry raises
-        the fencing error — a racing duplicate of the same batch commits
-        once). ``num_buckets`` pins the numbering the entries' bucket ids
-        were computed under: a winner that REBUCKETED the table makes them
-        stale (a bucket-7-of-32 file is not bucket-7-of-64), so that race
-        surfaces for a rewrite instead of corrupting the layout.
-        State-DEPENDENT commits (merge, compact, rewrite, rebucket) must
-        NOT rebase: their output was computed against the parent snapshot,
-        so they surface ConcurrentCommitError for the caller to
-        recompute."""
-        attempt = 0
-        while True:
+        """Commit APPEND-SHAPED ``entries`` with Iceberg's fast-append
+        retry: the new data files are already on disk and reference no
+        prior state, so each attempt re-reads the current manifest and
+        re-attaches OUR entries to ITS file list (up to
+        ``retry_conflicts`` rebases, :meth:`_retrying`). The exactly-once
+        fence is re-checked each attempt (if the winner fenced our batch
+        id, the retry raises the fencing error — a racing duplicate of the
+        same batch commits once). ``num_buckets`` pins the numbering the
+        entries' bucket ids were computed under: a winner that REBUCKETED
+        the table makes them stale (a bucket-7-of-32 file is not
+        bucket-7-of-64), so that race surfaces as ConcurrentCommitError
+        for a rewrite instead of corrupting the layout. State-DEPENDENT
+        commits (merge, compact, rewrite, rebucket, DML) must NOT rebase:
+        their output was computed against the parent snapshot, so they
+        recompute instead (:meth:`_rewrite`)."""
+
+        def attempt() -> dict:
             base = self.manifest()
             if base["num_buckets"] != num_buckets:
                 raise ConcurrentCommitError(
@@ -1261,15 +1278,50 @@ class LakeTable:
                     f"{operation} was writing — its bucket ids are stale; "
                     "rewrite the batch against the new layout"
                 )
-            try:
-                return self._commit(
-                    operation, base["files"] + entries, batch_id, summary,
-                    lineage, base=base,
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_conflicts:
-                    raise
-                attempt += 1
+            return self._commit(
+                operation, base["files"] + entries, batch_id, summary,
+                lineage, base=base,
+            )
+
+        return self._retrying(retry_conflicts, attempt)
+
+    def _rewrite(self, op: str, retries: int, batch_id, summary, plan) -> dict:
+        """The base-pinned rewrite core behind every state-dependent
+        maintenance and DML operation (compact, bin-pack, cluster,
+        rebucket, delete, update, MERGE INTO) — Sqoop's merge tool
+        collapse-to-newest under an optimistic commit.
+
+        Each attempt pins ``base = self.manifest()`` and calls
+        ``plan(base)``, which selects, reads, transforms and writes
+        against that snapshot. The plan returns ``None`` for a no-op
+        (``base`` is returned without committing) or ``(carried,
+        new_entries, summary_fields[, num_buckets])``; ``carried +
+        new_entries`` is then committed under ``base`` with the
+        operation's ``summary`` extended by ``summary_fields``. A
+        concurrent commit makes the link fail (the state the plan read no
+        longer exists); ``retries`` re-runs the whole plan against the
+        fresh manifest, so the winner's changes are INCLUDED. This is the
+        standing-maintenance loop — ingest never waits for maintenance,
+        maintenance retries around ingest. A lost attempt's data files
+        become orphans that ``remove_orphan_files`` ages out."""
+
+        def attempt() -> dict:
+            base = self.manifest()
+            out = plan(base)
+            if out is None:
+                return base
+            carried, entries, fields, *nb = out
+            return self._commit(
+                op,
+                carried + entries,
+                batch_id,
+                {**(summary or {}), **fields},
+                None,
+                num_buckets=nb[0] if nb else None,
+                base=base,
+            )
+
+        return self._retrying(retries, attempt)
 
     def append(
         self,
@@ -1351,75 +1403,49 @@ class LakeTable:
         A compactor racing live delta writers loses the commit link
         (base-pinned — the state it resolved no longer exists).
         ``retry_recompute`` > 0 re-runs the whole resolve from the fresh
-        manifest (the winner's new deltas are then INCLUDED); the failed
-        attempt's data files become orphans that ``remove_orphan_files``
-        ages out. This is the standing-compactor loop: ingest never waits
-        for compaction, compaction retries around ingest.
+        manifest (the winner's new deltas are then INCLUDED; see
+        :meth:`_rewrite`).
         """
-        attempt = 0
-        while True:
-            try:
-                return self._compact_once(
-                    buckets, batch_id, summary, tombstone_horizon
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
+        chosen = None if buckets is None else set(buckets)
 
-    def _compact_once(
-        self,
-        buckets: Iterable[int] | None,
-        batch_id: int | None,
-        summary: dict | None,
-        tombstone_horizon,
-    ) -> dict:
-        # Tombstone-only buckets are already compacted — re-resolving them
-        # would produce an identical state and a pointless commit. With a
-        # horizon given they ARE targeted, so aged-out tombstones get dropped.
-        base = self.manifest()
-        delta_buckets = sorted(
-            {
+        def plan(base: dict):
+            # Tombstone-only buckets are already compacted — re-resolving
+            # them would produce an identical state and a pointless commit.
+            # With a horizon given they ARE targeted, so aged-out tombstones
+            # get dropped.
+            delta_buckets = {
                 e["bucket"]
                 for e in base["files"]
                 if e.get("delta")
                 and (tombstone_horizon is not None or not e.get("tombstone"))
             }
-        )
-        if buckets is None:
-            target = delta_buckets
-        else:
-            target = sorted(set(buckets) & set(delta_buckets))
-        if not target:
-            return base
-        winners = self._resolve_winners(
-            self._read_files(
-                [e for e in base["files"] if e["bucket"] in set(target)],
-                version=base["version"],
-                with_op=True,
+            target = (
+                delta_buckets if chosen is None else chosen & delta_buckets
             )
-        ).persist()
-        try:
-            entries, tomb_entries = self._write_live_and_tombstones(
-                winners.filter(F.col("_op") != "delete").drop("_op"),
-                winners.filter(F.col("_op") == "delete"),
-                tombstone_horizon,
-            )
-        finally:
-            winners.unpersist()
-        carried = [e for e in base["files"] if e["bucket"] not in set(target)]
-        return self._commit(
-            "compact",
-            carried + entries + tomb_entries,
-            batch_id,
-            {
-                **(summary or {}),
+            if not target:
+                return None
+            winners = self._resolve_winners(
+                self._read_files(
+                    [e for e in base["files"] if e["bucket"] in target],
+                    version=base["version"],
+                    with_op=True,
+                )
+            ).persist()
+            try:
+                entries, tomb_entries = self._write_live_and_tombstones(
+                    winners.filter(F.col("_op") != "delete").drop("_op"),
+                    winners.filter(F.col("_op") == "delete"),
+                    tombstone_horizon,
+                )
+            finally:
+                winners.unpersist()
+            carried = [e for e in base["files"] if e["bucket"] not in target]
+            return carried, entries + tomb_entries, {
                 "compacted_buckets": len(target),
                 "tombstones": sum(e["rows"] for e in tomb_entries),
-            },
-            None,
-            base=base,
-        )
+            }
+
+        return self._rewrite("compact", retry_recompute, batch_id, summary, plan)
 
     def _write_live_and_tombstones(
         self, live: DataFrame, tomb: DataFrame, tombstone_horizon
@@ -1462,54 +1488,42 @@ class LakeTable:
         ``retry_recompute`` re-runs the pack against the fresh manifest on
         a lost commit race (the standing-maintenance loop, as
         :meth:`compact`)."""
-        attempt = 0
-        while True:
-            try:
-                return self._rewrite_small_files_once(
-                    target_rows, min_files, buckets, batch_id
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
+        chosen = None if buckets is None else set(buckets)
 
-    def _rewrite_small_files_once(
-        self, target_rows, min_files, buckets, batch_id
-    ) -> dict:
-        base = self.manifest()
-        base_by_bucket: dict[int, list[dict]] = {}
-        for e in base["files"]:
-            if not e.get("delta"):
-                base_by_bucket.setdefault(e["bucket"], []).append(e)
-        target = {
-            b: files
-            for b, files in base_by_bucket.items()
-            if len(files) >= min_files
-            and sum(f["rows"] for f in files) / len(files) < target_rows
-            and (buckets is None or b in set(buckets))
-        }
-        if not target:
-            return base
-        rewritten = [e for files in target.values() for e in files]
-        df = self._read_files(rewritten, version=base["version"])
-        entries = self._write_data_files(self._prepare_df(df))
-        carried = [
-            e
-            for e in base["files"]
-            if e.get("delta") or e["bucket"] not in target
-        ]
-        return self._commit(
-            "rewrite",
-            carried + entries,
-            batch_id,
-            {
+        def plan(base: dict):
+            target = {
+                b: files
+                for b, files in self._base_files_by_bucket(base).items()
+                if len(files) >= min_files
+                and sum(f["rows"] for f in files) / len(files) < target_rows
+                and (chosen is None or b in chosen)
+            }
+            if not target:
+                return None
+            rewritten = [e for files in target.values() for e in files]
+            df = self._read_files(rewritten, version=base["version"])
+            entries = self._write_data_files(self._prepare_df(df))
+            carried = [
+                e for e in base["files"] if e.get("delta") or e["bucket"] not in target
+            ]
+            return carried, entries, {
                 "rewritten_files": len(rewritten),
                 "new_files": len(entries),
                 "buckets": len(target),
-            },
-            None,
-            base=base,
-        )
+            }
+
+        return self._rewrite("rewrite", retry_recompute, batch_id, None, plan)
+
+    @staticmethod
+    def _base_files_by_bucket(base: dict, skip=()) -> dict[int, list[dict]]:
+        """Bucket id → base (non-delta) file entries of ``base``, for the
+        buckets not in ``skip`` — the file selection of the bin-pack and
+        clustering rewrites."""
+        out: dict[int, list[dict]] = {}
+        for e in base["files"]:
+            if not e.get("delta") and e["bucket"] not in skip:
+                out.setdefault(e["bucket"], []).append(e)
+        return out
 
     def rewrite_clustered(
         self,
@@ -1558,21 +1572,6 @@ class LakeTable:
         clustering against the fresh manifest on a lost commit race (the
         standing-maintenance loop, as :meth:`compact`).
         """
-        attempt = 0
-        while True:
-            try:
-                return self._rewrite_clustered_once(
-                    column, target_rows, buckets, batch_id
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
-
-    def _rewrite_clustered_once(
-        self, column, target_rows, buckets, batch_id
-    ) -> dict:
-        base = self.manifest()
         zcols: list[str] | None = None
         if isinstance(column, (list, tuple)):
             if len(column) == 1:
@@ -1585,59 +1584,49 @@ class LakeTable:
                 raise EngineError(
                     f"rewrite_clustered: no column {c!r} in table schema"
                 )
-        skip = self._resolve_buckets(base["files"])
-        chosen = set(buckets) if buckets is not None else None
-        target: dict[int, list[dict]] = {}
-        for e in base["files"]:
-            if (
-                not e.get("delta")
-                and e["bucket"] not in skip
-                and (chosen is None or e["bucket"] in chosen)
-            ):
-                target.setdefault(e["bucket"], []).append(e)
-        if not target:
-            return base
-        rewritten = [e for files in target.values() for e in files]
-        df = self._read_files(rewritten, version=base["version"])
-        if zcols:
-            # Z-order: sort by the Morton-interleaved bins of ALL the
-            # columns (lake/zorder.py) — sequential files then cover a
-            # narrow range of EVERY listed column, and scan() prunes on
-            # any of them. The z-value is a sort key only; nothing extra
-            # is written.
-            from sqoop_spark.lake.zorder import zvalue_column
+        chosen = None if buckets is None else set(buckets)
 
-            sort_key = zvalue_column(df, zcols, self.schema())
-            stats_cols = zcols
-        else:
-            sort_key = col
-            stats_cols = [col]
-        entries = self._write_data_files(
-            self._prepare_df(df),
-            sort_within=["_bucket", sort_key],
-            max_records_per_file=target_rows,
-            extra_stats_cols=stats_cols,
-        )
-        carried = [
-            e
-            for e in base["files"]
-            if e.get("delta") or e["bucket"] not in target
-        ]
-        return self._commit(
-            "cluster",
-            carried + entries,
-            batch_id,
-            {
+        def plan(base: dict):
+            skip = self._resolve_buckets(base["files"])
+            target = {
+                b: files
+                for b, files in self._base_files_by_bucket(base, skip).items()
+                if chosen is None or b in chosen
+            }
+            if not target:
+                return None
+            rewritten = [e for files in target.values() for e in files]
+            df = self._read_files(rewritten, version=base["version"])
+            if zcols:
+                # Z-order: sort by the Morton-interleaved bins of ALL the
+                # columns (lake/zorder.py) — sequential files then cover a
+                # narrow range of EVERY listed column, and scan() prunes on
+                # any of them. The z-value is a sort key only; nothing extra
+                # is written.
+                from sqoop_spark.lake.zorder import zvalue_column
+
+                sort_key = zvalue_column(df, zcols, self.schema())
+            else:
+                sort_key = col
+            entries = self._write_data_files(
+                self._prepare_df(df),
+                sort_within=["_bucket", sort_key],
+                max_records_per_file=target_rows,
+                extra_stats_cols=zcols or [col],
+            )
+            carried = [
+                e for e in base["files"] if e.get("delta") or e["bucket"] not in target
+            ]
+            return carried, entries, {
                 "cluster_column": zcols if zcols else col,
                 "zorder": bool(zcols),
                 "rewritten_files": len(rewritten),
                 "new_files": len(entries),
                 "buckets": len(target),
                 "skipped_delta_buckets": len(skip),
-            },
-            None,
-            base=base,
-        )
+            }
+
+        return self._rewrite("cluster", retry_recompute, batch_id, None, plan)
 
     def rebucket(
         self,
@@ -1682,78 +1671,52 @@ class LakeTable:
         """
         if new_num_buckets < 1:
             raise EngineError("rebucket: new_num_buckets must be >= 1")
-        attempt = 0
-        while True:
-            try:
-                return self._rebucket_once(
-                    int(new_num_buckets), batch_id, summary, tombstone_horizon
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
-
-    def _rebucket_once(
-        self,
-        new_num_buckets: int,
-        batch_id: int | None,
-        summary: dict | None,
-        tombstone_horizon,
-    ) -> dict:
-        base = self.manifest()
-        if new_num_buckets == base["num_buckets"]:
-            return base
-        files, v = base["files"], base["version"]
-        resolve_bs = self._resolve_buckets(files)
-        ent_resolve = [e for e in files if e["bucket"] in resolve_bs]
-        ent_plain = [
-            e for e in files
-            if e["bucket"] not in resolve_bs and not e.get("delta")
-        ]
-        # tombstone-only buckets' retained delete markers carry forward
-        ent_tomb = [
-            e for e in files
-            if e["bucket"] not in resolve_bs and e.get("delta")
-        ]
+        nb = int(new_num_buckets)
         keys = [F.col(c) for c in self.key_columns]
-        new_bucket = F.pmod(
-            F.xxhash64(*keys), F.lit(new_num_buckets)
-        ).cast("int")
+        new_bucket = F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int")
 
-        live = self._read_files(ent_plain, version=v)
-        tomb = self._read_files(ent_tomb, version=v, with_op=True)
-        winners = None
-        if ent_resolve:
-            winners = self._resolve_winners(
-                self._read_files(ent_resolve, version=v, with_op=True)
-            ).persist()
-            live = live.unionByName(
-                winners.filter(F.col("_op") != "delete").drop("_op")
-            )
-            tomb = tomb.unionByName(winners.filter(F.col("_op") == "delete"))
-        try:
-            entries, tomb_entries = self._write_live_and_tombstones(
-                live.withColumn("_bucket", new_bucket),
-                tomb.withColumn("_bucket", new_bucket),
-                tombstone_horizon,
-            )
-        finally:
-            if winners is not None:
-                winners.unpersist()
-        return self._commit(
-            "rebucket",
-            entries + tomb_entries,
-            batch_id,
-            {
-                **(summary or {}),
+        def plan(base: dict):
+            if nb == base["num_buckets"]:
+                return None
+            files, v = base["files"], base["version"]
+            resolve_bs = self._resolve_buckets(files)
+            ent_resolve = [e for e in files if e["bucket"] in resolve_bs]
+            ent_plain = [
+                e for e in files
+                if e["bucket"] not in resolve_bs and not e.get("delta")
+            ]
+            # tombstone-only buckets' retained delete markers carry forward
+            ent_tomb = [
+                e for e in files
+                if e["bucket"] not in resolve_bs and e.get("delta")
+            ]
+            live = self._read_files(ent_plain, version=v)
+            tomb = self._read_files(ent_tomb, version=v, with_op=True)
+            winners = None
+            if ent_resolve:
+                winners = self._resolve_winners(
+                    self._read_files(ent_resolve, version=v, with_op=True)
+                ).persist()
+                live = live.unionByName(
+                    winners.filter(F.col("_op") != "delete").drop("_op")
+                )
+                tomb = tomb.unionByName(winners.filter(F.col("_op") == "delete"))
+            try:
+                entries, tomb_entries = self._write_live_and_tombstones(
+                    live.withColumn("_bucket", new_bucket),
+                    tomb.withColumn("_bucket", new_bucket),
+                    tombstone_horizon,
+                )
+            finally:
+                if winners is not None:
+                    winners.unpersist()
+            return [], entries + tomb_entries, {
                 "num_buckets_before": base["num_buckets"],
-                "num_buckets_after": new_num_buckets,
+                "num_buckets_after": nb,
                 "tombstones": sum(e["rows"] for e in tomb_entries),
-            },
-            None,
-            num_buckets=new_num_buckets,
-            base=base,
-        )
+            }, nb
+
+        return self._rewrite("rebucket", retry_recompute, batch_id, summary, plan)
 
     def overwrite_buckets(
         self,
@@ -1810,26 +1773,19 @@ class LakeTable:
         def ours(m: dict) -> set[str]:
             return {e["path"] for e in m["files"] if e["bucket"] in bs}
 
-        nb0 = base["num_buckets"]
-        attempt = 0
-        while True:
-            carried = [e for e in base["files"] if e["bucket"] not in bs]
-            try:
-                return self._commit(
-                    "merge", carried + keep + entries, batch_id, summary, lineage,
-                    base=base,
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_conflicts:
-                    raise
-                attempt += 1
+        attempts = 0
+
+        def attempt() -> dict:
+            nonlocal attempts
+            current = base
+            if attempts:  # a re-attempt rebases only past a disjoint winner
                 current = self.manifest()
                 # a rebucket winner invalidates our bucket numbering even
                 # when our buckets' file sets compare equal (e.g. both
                 # empty) — the merge must be recomputed against the new
                 # layout, never rebased
                 if (
-                    current["num_buckets"] != nb0
+                    current["num_buckets"] != base["num_buckets"]
                     or ours(current) != ours(base)
                 ):
                     raise ConcurrentCommitError(
@@ -1838,8 +1794,15 @@ class LakeTable:
                         "this merge was computed against — recompute "
                         "required (only disjoint-bucket winners can be "
                         "rebased)"
-                    ) from None
-                base = current
+                    )
+            attempts += 1
+            carried = [e for e in current["files"] if e["bucket"] not in bs]
+            return self._commit(
+                "merge", carried + keep + entries, batch_id, summary, lineage,
+                base=current,
+            )
+
+        return self._retrying(retry_conflicts, attempt)
 
     def overwrite_all(
         self, df: DataFrame, batch_id: int | None = None, summary: dict | None = None
@@ -1900,16 +1863,12 @@ class LakeTable:
                 unattributed.add(b)
         return counts, matched, unattributed
 
-    def _dml_bucket_winners(self, base: dict, buckets: set[int]) -> DataFrame:
-        entries = [e for e in base["files"] if e["bucket"] in buckets]
-        return self._dml_entry_winners(base, entries)
-
     def _dml_entry_winners(self, base: dict, entries: list[dict]) -> DataFrame:
         """Newest-wins winners of ``entries`` at ``base`` WITH the ``_op``
         column retained — winning CDC delete markers included, so a DML
         rewrite of a bucket holding unmerged deltas or retained tombstones
         never drops the markers that guard against out-of-order
-        resurrection (the same contract as ``_compact_once``). Bucket-
+        resurrection (the same contract as :meth:`compact`). Bucket-
         granular like ``_read_state``: only buckets with unmerged
         non-tombstone deltas pay the resolve window; plain buckets scan
         base files (live winners) and tombstone files (delete winners)
@@ -1940,6 +1899,68 @@ class LakeTable:
                 )
             )
         return out
+
+    def _erased_marker(self, prefix: str = "") -> list[F.Column]:
+        """Select list of a payload-free delete marker: the key and order
+        columns (read through ``prefix``) survive, every other column is
+        NULL — so erased data does not live on in its tombstone."""
+        return [
+            F.col(prefix + f.name)
+            if f.name in self.key_columns or f.name == self.order_column
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in self.schema().fields
+        ] + [F.lit("delete").alias("_op")]
+
+    def _dml_rewrite(
+        self, op, rows_key, pred, batch_id, summary, retries, write, fields=None
+    ) -> dict:
+        """File-granular copy-on-write DML under :meth:`_rewrite` — the
+        shared plan of :meth:`delete_where` and :meth:`update_where`.
+
+        One discovery scan (:meth:`_matched_files`) attributes matching
+        rows to exact files. In the affected buckets a file is kept
+        (carried by reference, never read or rewritten) when its bucket is
+        plain (no delta/tombstone entries — winners there are per-file),
+        every one of its bucket's matches was attributed to a file, and it
+        is not a matched file. The other files' winners
+        (:meth:`_dml_entry_winners`) go to ``write``, which returns the
+        rewrite's ``(entries, tomb_entries)``. Write amplification:
+        O(files actually holding matching rows), the GDPR-delete shape at
+        100 TB (erase one subject → rewrite only the few files carrying
+        their rows). No match is a no-op."""
+
+        def plan(base: dict):
+            counts, matched, unattributed = self._matched_files(
+                self._read_state(base["version"], None), pred
+            )
+            if not counts:
+                return None
+            bs = set(counts)
+            aff = [e for e in base["files"] if e["bucket"] in bs]
+            full = {
+                e["bucket"] for e in aff if e.get("delta") or e.get("tombstone")
+            } | unattributed
+            touched, kept = [], []
+            for e in aff:
+                if e["bucket"] in full or e["path"] in matched:
+                    touched.append(e)
+                else:
+                    kept.append(e)
+            win = self._dml_entry_winners(base, touched).persist()
+            try:
+                entries, tomb_entries = write(win)
+            finally:
+                win.unpersist()
+            carried = [e for e in base["files"] if e["bucket"] not in bs] + kept
+            return carried, entries + tomb_entries, {
+                rows_key: sum(counts.values()),
+                "rewritten_buckets": len(bs),
+                **(fields or {}),
+                "files_carried_in_buckets": len(kept),
+                "files_rewritten_from": len(touched),
+            }
+
+        return self._rewrite(op, retries, batch_id, summary, plan)
 
     def delete_where(
         self,
@@ -1981,85 +2002,19 @@ class LakeTable:
         returns the current manifest without committing.
         """
         pred = self._as_predicate(condition)
-        attempt = 0
-        while True:
-            try:
-                return self._delete_where_once(
-                    pred, batch_id, summary, tombstone_horizon
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
 
-    def _dml_split_touched(
-        self, base: dict, bs: set[int], matched: set[str], unattributed: set[int]
-    ) -> tuple[list[dict], list[dict]]:
-        """File-granular DML split of the affected buckets' entries:
-        ``(touched, kept)`` — a file is kept (carried by reference, never
-        read or rewritten) when its bucket is plain (no delta/tombstone
-        entries — winners there are per-file), every one of its bucket's
-        matches was attributed to a file, and it is not a matched file.
-        Write amplification: O(files actually holding matching rows), the
-        GDPR-delete shape at 100 TB (erase one subject → rewrite only the
-        few files carrying their rows)."""
-        aff = [e for e in base["files"] if e["bucket"] in bs]
-        full = {
-            e["bucket"] for e in aff if e.get("delta") or e.get("tombstone")
-        } | unattributed
-        touched, kept = [], []
-        for e in aff:
-            if e["bucket"] in full or e["path"] in matched:
-                touched.append(e)
-            else:
-                kept.append(e)
-        return touched, kept
-
-    def _delete_where_once(
-        self, pred: F.Column, batch_id, summary, tombstone_horizon
-    ) -> dict:
-        base = self.manifest()
-        counts, matched, unattributed = self._matched_files(
-            self._read_state(base["version"], None), pred
-        )
-        if not counts:
-            return base
-        bs = set(counts)
-        touched, kept = self._dml_split_touched(base, bs, matched, unattributed)
-        win = self._dml_entry_winners(base, touched).persist()
-        try:
+        def write(win: DataFrame):
             live = win.filter(F.col("_op") != "delete")
-            keep = live.filter(~pred).drop("_op")
             # GDPR marker: keys + order value survive, the payload does not
-            erased = live.filter(pred).select(
-                *[
-                    F.col(f.name)
-                    if f.name in self.key_columns or f.name == self.order_column
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in self.schema().fields
-                ],
-                F.lit("delete").alias("_op"),
-            )
+            erased = live.filter(pred).select(*self._erased_marker())
             tomb = win.filter(F.col("_op") == "delete").unionByName(erased)
-            entries, tomb_entries = self._write_live_and_tombstones(
-                keep, tomb, tombstone_horizon
+            return self._write_live_and_tombstones(
+                live.filter(~pred).drop("_op"), tomb, tombstone_horizon
             )
-        finally:
-            win.unpersist()
-        carried = [e for e in base["files"] if e["bucket"] not in bs] + kept
-        return self._commit(
-            "delete",
-            carried + entries + tomb_entries,
-            batch_id,
-            {
-                **(summary or {}),
-                "rows_deleted": sum(counts.values()),
-                "rewritten_buckets": len(bs),
-                "files_carried_in_buckets": len(kept),
-                "files_rewritten_from": len(touched),
-            },
-            None,
-            base=base,
+
+        return self._dml_rewrite(
+            "delete", "rows_deleted", pred, batch_id, summary, retry_recompute,
+            write,
         )
 
     def update_where(
@@ -2104,28 +2059,8 @@ class LakeTable:
                 "change is a delete + insert, not an update"
             )
         pred = self._as_predicate(condition)
-        attempt = 0
-        while True:
-            try:
-                return self._update_where_once(pred, exprs, batch_id, summary)
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
 
-    def _update_where_once(
-        self, pred: F.Column, exprs: dict[str, F.Column], batch_id, summary
-    ) -> dict:
-        base = self.manifest()
-        counts, matched, unattributed = self._matched_files(
-            self._read_state(base["version"], None), pred
-        )
-        if not counts:
-            return base
-        bs = set(counts)
-        touched, kept = self._dml_split_touched(base, bs, matched, unattributed)
-        win = self._dml_entry_winners(base, touched).persist()
-        try:
+        def write(win: DataFrame):
             live = win.filter(F.col("_op") != "delete").drop("_op")
             updated = live.filter(pred).select(
                 *[
@@ -2133,27 +2068,15 @@ class LakeTable:
                     for f in self.schema().fields
                 ]
             )
-            new_live = live.filter(~pred).unionByName(updated)
-            entries, tomb_entries = self._write_live_and_tombstones(
-                new_live, win.filter(F.col("_op") == "delete"), None
+            return self._write_live_and_tombstones(
+                live.filter(~pred).unionByName(updated),
+                win.filter(F.col("_op") == "delete"),
+                None,
             )
-        finally:
-            win.unpersist()
-        carried = [e for e in base["files"] if e["bucket"] not in bs] + kept
-        return self._commit(
-            "update",
-            carried + entries + tomb_entries,
-            batch_id,
-            {
-                **(summary or {}),
-                "rows_updated": sum(counts.values()),
-                "rewritten_buckets": len(bs),
-                "set_columns": sorted(exprs),
-                "files_carried_in_buckets": len(kept),
-                "files_rewritten_from": len(touched),
-            },
-            None,
-            base=base,
+
+        return self._dml_rewrite(
+            "update", "rows_updated", pred, batch_id, summary, retry_recompute,
+            write, {"set_columns": sorted(exprs)},
         )
 
     def merge_into(
@@ -2258,21 +2181,6 @@ class LakeTable:
             if isinstance(update_condition, str)
             else update_condition
         )
-        attempt = 0
-        while True:
-            try:
-                return self._merge_into_once(
-                    source, upd, upd_cond, del_cond, ins, batch_id, summary
-                )
-            except ConcurrentCommitError:
-                if attempt >= retry_recompute:
-                    raise
-                attempt += 1
-
-    def _merge_into_once(
-        self, source, upd, upd_cond, del_cond, ins, batch_id, summary
-    ) -> dict:
-        base = self.manifest()
         keys = self.key_columns
         nk = F.lit(False)
         for k in keys:
@@ -2288,7 +2196,7 @@ class LakeTable:
             .collect()[0]
         )
         if stats["n_keys"] == 0:
-            return base
+            return self.manifest()
         if stats["has_null"]:
             raise EngineError("merge_into: NULL merge key in source")
         if stats["mx"] > 1:
@@ -2296,89 +2204,79 @@ class LakeTable:
                 "merge_into: multiple source rows share a merge key — "
                 "reduce the source first (Delta's multiple-matches error)"
             )
-        bs = {
-            int(r["_b"])
-            for r in source.select(self.bucket_expr().alias("_b")).distinct().collect()
-        }
-        win = self._dml_bucket_winners(base, bs).persist()
-        try:
-            live = win.filter(F.col("_op") != "delete").drop("_op")
-            t, s = live.alias("t"), source.alias("s")
-            cond = None
-            for k in keys:
-                p = F.col(f"t.{k}") == F.col(f"s.{k}")
-                cond = p if cond is None else (cond & p)
-            j = t.join(s, cond, "full_outer")
-            has_t = F.col(f"t.{keys[0]}").isNotNull()
-            has_s = F.col(f"s.{keys[0]}").isNotNull()
-            matched = has_t & has_s
 
-            def total(c):  # NULL condition never fires a clause
-                return F.coalesce(c.cast("boolean"), F.lit(False))
+        def plan(base: dict):
+            bs = {
+                int(r["_b"])
+                for r in source.select(self.bucket_expr().alias("_b")).distinct().collect()
+            }
+            win = self._dml_entry_winners(
+                base, [e for e in base["files"] if e["bucket"] in bs]
+            ).persist()
+            try:
+                live = win.filter(F.col("_op") != "delete").drop("_op")
+                t, s = live.alias("t"), source.alias("s")
+                cond = None
+                for k in keys:
+                    p = F.col(f"t.{k}") == F.col(f"s.{k}")
+                    cond = p if cond is None else (cond & p)
+                j = t.join(s, cond, "full_outer")
+                has_t = F.col(f"t.{keys[0]}").isNotNull()
+                has_s = F.col(f"s.{keys[0]}").isNotNull()
+                matched = has_t & has_s
 
-            del_p = matched & (total(del_cond) if del_cond is not None else F.lit(False))
-            upd_p = matched & (
-                F.lit(upd is not None)
-                & (total(upd_cond) if upd_cond is not None else F.lit(True))
-            )
-            ins_enabled = ins is not False
+                def total(c):  # NULL condition never fires a clause
+                    return F.coalesce(c.cast("boolean"), F.lit(False))
 
-            def upd_val(f):
-                if upd == "source":
-                    return F.col(f"s.{f.name}")
-                if isinstance(upd, dict) and f.name in upd:
-                    return upd[f.name]
-                return F.col(f"t.{f.name}")
+                del_p = matched & (total(del_cond) if del_cond is not None else F.lit(False))
+                upd_p = matched & (
+                    F.lit(upd is not None)
+                    & (total(upd_cond) if upd_cond is not None else F.lit(True))
+                )
+                ins_enabled = ins is not False
 
-            def ins_val(f):
-                if f.name in keys:
-                    return F.col(f"s.{f.name}")
-                if ins is True:
-                    return F.col(f"s.{f.name}")
-                if isinstance(ins, dict) and f.name in ins:
-                    return ins[f.name]
-                return F.lit(None).cast(f.dataType)
+                def upd_val(f):
+                    if upd == "source":
+                        return F.col(f"s.{f.name}")
+                    if isinstance(upd, dict) and f.name in upd:
+                        return upd[f.name]
+                    return F.col(f"t.{f.name}")
 
-            live_out = j.filter(
-                (has_t & ~del_p) | (~has_t & F.lit(ins_enabled))
-            ).select(
-                *[
-                    F.when(~has_t, ins_val(f).cast(f.dataType))
-                    .when(upd_p, upd_val(f).cast(f.dataType))
-                    .otherwise(F.col(f"t.{f.name}"))
-                    .alias(f.name)
-                    for f in self.schema().fields
-                ]
-            )
-            tomb_new = j.filter(del_p).select(
-                *[
-                    F.col(f"t.{f.name}")
-                    if f.name in keys or f.name == self.order_column
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in self.schema().fields
-                ],
-                F.lit("delete").alias("_op"),
-            )
-            tomb = win.filter(F.col("_op") == "delete").unionByName(tomb_new)
-            entries, tomb_entries = self._write_live_and_tombstones(
-                live_out, tomb, None
-            )
-        finally:
-            win.unpersist()
-        carried = [e for e in base["files"] if e["bucket"] not in bs]
-        return self._commit(
-            "merge-into",
-            carried + entries + tomb_entries,
-            batch_id,
-            {
-                **(summary or {}),
+                def ins_val(f):
+                    if f.name in keys:
+                        return F.col(f"s.{f.name}")
+                    if ins is True:
+                        return F.col(f"s.{f.name}")
+                    if isinstance(ins, dict) and f.name in ins:
+                        return ins[f.name]
+                    return F.lit(None).cast(f.dataType)
+
+                live_out = j.filter(
+                    (has_t & ~del_p) | (~has_t & F.lit(ins_enabled))
+                ).select(
+                    *[
+                        F.when(~has_t, ins_val(f).cast(f.dataType))
+                        .when(upd_p, upd_val(f).cast(f.dataType))
+                        .otherwise(F.col(f"t.{f.name}"))
+                        .alias(f.name)
+                        for f in self.schema().fields
+                    ]
+                )
+                tomb_new = j.filter(del_p).select(*self._erased_marker("t."))
+                tomb = win.filter(F.col("_op") == "delete").unionByName(tomb_new)
+                entries, tomb_entries = self._write_live_and_tombstones(
+                    live_out, tomb, None
+                )
+            finally:
+                win.unpersist()
+            carried = [e for e in base["files"] if e["bucket"] not in bs]
+            return carried, entries + tomb_entries, {
                 "source_keys": int(stats["n_keys"]),
                 "rewritten_buckets": len(bs),
                 "tombstones": sum(e["rows"] for e in tomb_entries),
-            },
-            None,
-            base=base,
-        )
+            }
+
+        return self._rewrite("merge-into", retry_recompute, batch_id, summary, plan)
 
     def patch_lineage(
         self, manifest: dict, lineage: dict, merge_summary: bool = True
@@ -2698,22 +2596,13 @@ class LakeTable:
                     return self.manifest(v)
             return None
 
-        attempt = 0
-        while True:
-            done = already_published()
-            if done is not None:
-                m = done
-                break
-            try:
-                m = self._commit_append_shaped(
-                    st["operation"], st["entries"], st["batch_id"], summary,
-                    st["lineage"], 0, st["num_buckets"],
-                )
-                break
-            except ConcurrentCommitError:
-                if attempt >= retry_conflicts:
-                    raise
-                attempt += 1
+        def attempt() -> dict:
+            return already_published() or self._commit_append_shaped(
+                st["operation"], st["entries"], st["batch_id"], summary,
+                st["lineage"], 0, st["num_buckets"],
+            )
+
+        m = self._retrying(retry_conflicts, attempt)
         try:
             os.unlink(self._staged_path(wap_id))
         except FileNotFoundError:

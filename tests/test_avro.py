@@ -217,3 +217,42 @@ def test_cli_export_avro(spark, scratch, capsys):
     assert _json.loads(capsys.readouterr().out)["rows"] == 50
     _, got = read_avro_container(target)
     assert sorted(got) == [(i, str(2 * i)) for i in range(50)]
+
+
+_PIN_ROWS = [
+    (0, 1, "héllo", 1.5, 0.25, True, bytearray(b"\x00\x01"), Decimal("1.500")),
+    (-(2**40), None, None, None, None, None, None, None),
+    (7, -3, "x,y\n z", -0.25, -2.0, False, bytearray(b""), Decimal("-0.001")),
+    (2**50, 2**31 - 1, "", float("inf"), 1e30, True, bytearray(b"\xff" * 5), Decimal("12.5")),
+    (5, 0, "tail", 0.0, None, None, bytearray(b"z"), Decimal("0")),
+]
+_PIN_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("n", T.IntegerType()),
+    T.StructField("s", T.StringType()),
+    T.StructField("d", T.DoubleType()),
+    T.StructField("f", T.FloatType()),
+    T.StructField("b", T.BooleanType()),
+    T.StructField("raw", T.BinaryType()),
+    T.StructField("order total", T.DecimalType(10, 3)),
+])
+
+
+@pytest.mark.parametrize("codec,sha256", [
+    ("null", "e6e975053023c460f01207788a10d5e73ddbec012858be6fddd0435c4594813b"),
+    ("deflate", "7040d0810f5df947362c5fc199cb056c5ca96cd38b8cc2087048396ff167fab9"),
+])
+def test_avro_container_bytes_pinned(spark, scratch, codec, sha256):
+    """Byte pin of the --as-avrodatafile format: a one-partition frame
+    (every primitive, nulls, a converted decimal, three blocks) must
+    export to exactly these bytes, so codec refactors cannot drift the
+    file format while still round-tripping through their own reader."""
+    import hashlib
+
+    from sqoop_spark.avro_container import write_avro_container
+
+    df = spark.createDataFrame(_PIN_ROWS, _PIN_SCHEMA).coalesce(1)
+    path = f"{scratch}/pin_{codec}"
+    write_avro_container(df, path, codec=codec, objects_per_block=2)
+    with open(f"{path}/part-00000.avro", "rb") as fh:
+        assert hashlib.sha256(fh.read()).hexdigest() == sha256

@@ -88,6 +88,22 @@ def test_empty_password_still_conflicts(tmp_path):
         resolve_password(args)
 
 
+def test_lone_empty_password_alias_is_an_error(tmp_path, monkeypatch):
+    """A lone --password-alias '' must fail loudly, not fall back to
+    $SQOOP_SPARK_PASSWORD (the same truthiness bug class)."""
+    from sqoop_spark.cli import PASSWORD_ENV_VAR, build_parser, resolve_password
+
+    monkeypatch.setenv(PASSWORD_ENV_VAR, "from-env")
+    ks = str(tmp_path / "store.json")
+    create_credential(ks, "db.pw", "hunter2")
+    args = build_parser().parse_args(
+        ["eval", "-e", "SELECT 1", "--password-alias", "",
+         "--credential-provider", ks]
+    )
+    with pytest.raises(SystemExit, match="non-empty alias"):
+        resolve_password(args)
+
+
 def test_resolve_password_alias_and_exclusivity(tmp_path, monkeypatch):
     from sqoop_spark.cli import resolve_password
 

@@ -135,6 +135,40 @@ def test_export_refuses_unmerged_deltas_then_allows_after_compact(spark, scratch
     assert got.count() == t.read().count()
 
 
+def test_export_refuses_int96_timestamps_then_allows_after_rewrite(spark, scratch):
+    """A table whose parquet stores INT96 timestamps (written before lake
+    writes pinned TIMESTAMP_MICROS, or under a foreign session conf) is
+    refused like unmerged deltas: the Iceberg spec forbids INT96."""
+    import pyarrow.parquet as pq
+
+    t = _table(spark, scratch, "ice_int96", n=40)
+    conf = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "INT96")
+    try:
+        for i, e in enumerate(t.manifest()["files"]):
+            full = os.path.join(t.path, e["path"])
+            tmp = os.path.join(scratch, f"int96_{i}")
+            spark.read.parquet(full).coalesce(1).write.parquet(tmp)
+            (part,) = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+            os.replace(os.path.join(tmp, part), full)
+            crc = os.path.join(os.path.dirname(full), f".{os.path.basename(full)}.crc")
+            if os.path.exists(crc):  # stale checksum of the replaced file
+                os.unlink(crc)
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+    schema = pq.read_metadata(full).schema
+    assert "INT96" in {schema.column(i).physical_type for i in range(len(schema))}
+    with pytest.raises(EngineError, match="INT96"):
+        export_iceberg(t)
+    t.rewrite_clustered()
+    files = read_data_files(export_iceberg(t))
+    assert sum(f["record_count"] for f in files) == 40
+
+
 def test_export_time_travel_version(spark, scratch):
     t = _table(spark, scratch, "ice4", n=40)
     v1 = t.current_version()
