@@ -343,7 +343,6 @@ def _merge_apply_mor(
     reduced: DataFrame,
     batch_id: int | None,
     op_col: str,
-    affected: list[int],
     obs_in: Observation,
     post_reduce_transform,
     extra_summary: dict | None,
@@ -380,8 +379,9 @@ def _merge_apply_mor(
     got_in = _safe_observation(obs_in, obs_timeout)
     rows_in = int(got_in.get("events_in") or 0)
 
-    new_files = [e for e in manifest["files"] if e.get("delta") and e["path"] not in
-                 {x["path"] for x in table.manifest(manifest["parent"])["files"]}]
+    parent_paths = {x["path"] for x in table.manifest(manifest["parent"])["files"]}
+    new_files = [e for e in manifest["files"]
+                 if e.get("delta") and e["path"] not in parent_paths]
     per_bucket: dict[int, int] = {}
     for e in new_files:
         per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + e["rows"]
@@ -418,7 +418,7 @@ def _merge_apply_mor(
         updated=0,
         inserted=rows_out - deletes,
         deleted=deletes,
-        buckets_touched=len(affected),
+        buckets_touched=len(per_bucket),
         buckets_total=table.num_buckets,
         counters_missing="events_in" not in got_in,
     )
@@ -555,15 +555,19 @@ def merge_apply(
     if op_col not in batch.columns:
         batch = batch.withColumn(op_col, F.lit("upsert"))
 
-    # Affected buckets: distinct bucket ids of the RAW batch keys — the
-    # newest-wins reduce cannot change the key set, so probing before the
-    # window/UDF chain reads just the key columns (parquet column pruning)
-    # instead of materializing the transformed batch. Tiny result
-    # (≤ num_buckets rows); this is the pruning key. On the CoW path the
-    # SAME probe job also records per-bucket [min, max] of every key
-    # column — the batch-side half of the file-granular zone-map carry
-    # (``_split_zone_carry``); no extra job, the min/max partials ride the
-    # groupBy's map-side combine.
+    # Affected buckets (CoW only): distinct bucket ids of the RAW batch
+    # keys — the newest-wins reduce cannot change the key set, so probing
+    # before the window/UDF chain reads just the key columns (parquet
+    # column pruning) instead of materializing the transformed batch. Tiny
+    # result (≤ num_buckets rows); this is the pruning key. With
+    # ``file_granular`` the SAME probe job also records per-bucket
+    # [min, max] of every key column — the batch-side half of the
+    # file-granular zone-map carry (``_split_zone_carry``); no extra job,
+    # the min/max partials ride the groupBy's map-side combine. MoR reads
+    # no old side, so it runs no probe: its ``buckets_touched`` counts the
+    # buckets of the delta files it commits.
+    affected: list[int] = []
+    batch_ranges: dict = {}
     if strategy == "cow" and file_granular:
         aggs = []
         for k in key_cols:
@@ -583,12 +587,11 @@ def merge_apply(
             }
             for r in probe
         }
-    else:
+    elif strategy != "mor":
         affected = sorted(
             r["_b"]
             for r in batch.select(table.bucket_expr().alias("_b")).distinct().collect()
         )
-        batch_ranges = {}
     _mark("affected-probe")
 
     obs_in = Observation(f"merge-in-{batch_id}")
@@ -623,7 +626,6 @@ def merge_apply(
             batch,
             batch_id,
             op_col,
-            affected,
             obs_in,
             post_reduce_transform,
             extra_summary,

@@ -14,11 +14,12 @@ for an environment with no JVM keystore and no crypto library:
   (the ``hadoop.security.credential.provider.path`` analog);
 - each alias's secret is encrypted with a keystream derived from the
   store password (``$SQOOP_SPARK_CREDSTORE_PASSWORD``, default
-  ``"none"`` — Hadoop's own default) via PBKDF2-HMAC-SHA256 key
-  derivation and an HMAC-SHA256 counter-mode keystream, with an HMAC
-  integrity tag (encrypt-then-MAC). Stdlib-only; the divergence from
-  JCEKS's JCE ciphers is documented here rather than shipping a
-  hand-rolled AES;
+  ``"none"`` — Hadoop's own default, which logs a warning on every create
+  and fetch because it only obfuscates; an explicit empty store password
+  is refused) via PBKDF2-HMAC-SHA256 key derivation and an HMAC-SHA256
+  counter-mode keystream, with an HMAC integrity tag (encrypt-then-MAC).
+  Stdlib-only; the divergence from JCEKS's JCE ciphers is documented here
+  rather than shipping a hand-rolled AES;
 - the store is created ``0600`` and reads warn when group/other-readable,
   the same posture as ``--password-file``.
 
@@ -32,6 +33,7 @@ import base64
 import hashlib
 import hmac
 import json
+import logging
 import os
 import secrets
 import sys
@@ -41,6 +43,7 @@ ENV_STORE_PASSWORD = "SQOOP_SPARK_CREDSTORE_PASSWORD"
 DEFAULT_STORE_PASSWORD = "none"  # Hadoop's CredentialProvider default
 _PBKDF2_ITERS = 100_000
 VERSION = 1
+_log = logging.getLogger(__name__)
 
 
 class CredentialError(Exception):
@@ -48,7 +51,23 @@ class CredentialError(Exception):
 
 
 def _store_password(explicit: str | None = None) -> str:
-    return explicit or os.environ.get(ENV_STORE_PASSWORD) or DEFAULT_STORE_PASSWORD
+    """The store password: ``explicit``, else ``$SQOOP_SPARK_CREDSTORE_PASSWORD``,
+    else Hadoop's default — with a warning, because a store sealed under
+    the public default is readable by anyone who can read the file. An
+    explicit empty password is an error, not a request for the default."""
+    if explicit == "":
+        raise CredentialError("store password must not be empty")
+    pw = explicit or os.environ.get(ENV_STORE_PASSWORD)
+    if pw:
+        return pw
+    _log.warning(
+        "credential store password is the default %r ($%s unset): the "
+        "keystore only obfuscates its secrets; anyone who can read the "
+        "file can decrypt them",
+        DEFAULT_STORE_PASSWORD,
+        ENV_STORE_PASSWORD,
+    )
+    return DEFAULT_STORE_PASSWORD
 
 
 def _derive_key(store_password: str, salt: bytes) -> bytes:

@@ -32,6 +32,7 @@ tests; thousands on a real cluster).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -39,6 +40,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Any, Iterable
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,7 +95,12 @@ def _footer_column_stats(meta, wanted: list[str]) -> dict[str, list]:
             if st is None or not st.has_min_max:
                 ok = False
                 break
-            mn, mx = _json_stat(st.min), _json_stat(st.max)
+            try:
+                mn, mx = _json_stat(st.min), _json_stat(st.max)
+            except pa.ArrowNotImplementedError:
+                # pyarrow cannot decode some logical types' bounds (e.g.
+                # decimal stored as INT64) — no stat, prune fails open
+                mn = mx = None
             if mn is None or mx is None:
                 ok = False
                 break
@@ -113,8 +120,92 @@ class SnapshotInfo:
     num_files: int
 
 
+@functools.lru_cache(maxsize=None)
 def _type_from_ddl(ddl: str) -> T.DataType:
+    # one py4j parse per distinct DDL string, not per field per schema()
+    # call; callers never mutate the returned (shared) types
     return T._parse_datatype_string(ddl)
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """Standard XXH64 of ``data`` (unsigned 64-bit in, unsigned out) —
+    the function behind Spark's ``xxhash64``."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i <= n - 32:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little")
+                v[j] = _xxh64_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def driver_bucket(
+    values: list, types: list[T.DataType], num_buckets: int
+) -> int | None:
+    """``pmod(xxhash64(keys), num_buckets)`` — the writer's bucket
+    expression (:meth:`LakeTable.bucket_expr`) — in pure Python: seed 42,
+    chained column by column; a string hashes its UTF-8 bytes (of
+    ``str(value)``, the same text the JVM cast would see), a byte, short
+    or int its 4 little-endian bytes, a long its 8. ``None`` when some
+    column is neither a binary-collated string nor an integral column
+    holding a Python int in range: the caller must ask the JVM."""
+    h = 42
+    for v, dt in zip(values, types):
+        bits = _INT_BITS.get(type(dt))
+        if isinstance(dt, T.StringType) and dt.collation == "UTF8_BINARY":
+            data = str(v).encode("utf-8")
+        elif (
+            bits
+            and isinstance(v, int)
+            and not isinstance(v, bool)
+            and -(1 << bits - 1) <= v < 1 << bits - 1
+        ):
+            width = 8 if bits == 64 else 4
+            data = (v & (1 << 8 * width) - 1).to_bytes(width, "little")
+        else:
+            return None
+        h = _xxh64(data, h)
+    signed = h - (1 << 64) if h >> 63 else h
+    return signed % num_buckets
 
 
 class LakeTable:
@@ -554,16 +645,23 @@ class LakeTable:
         return out
 
     def bucket_of(self, key: dict) -> int:
-        """The bucket a full key tuple hashes to, computed with the SAME
-        expression the writer buckets rows under (pmod(xxhash64(cast
-        keys), B)) — a one-row probe job, no table scan."""
+        """The bucket a full key tuple hashes to under the writer's
+        expression ``pmod(xxhash64(cast(str(v) AS type)), B)``. String and
+        in-range integral keys hash on the driver (:func:`driver_bucket`,
+        no Spark job); any other key type is one JVM literal projection
+        over ``spark.range(1)`` with the same cast — no table scan either
+        way."""
         schema = self.schema()
         fields = [schema[c] for c in self.key_columns]
-        probe = self.spark.createDataFrame(
-            [tuple(str(key[c]) for c in self.key_columns)],
-            T.StructType([T.StructField(f.name, T.StringType()) for f in fields]),
-        ).select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+        b = driver_bucket(
+            [key[f.name] for f in fields],
+            [f.dataType for f in fields],
+            self.num_buckets,
+        )
+        if b is not None:
+            return b
+        probe = self.spark.range(1).select(
+            *[F.lit(str(key[f.name])).cast(f.dataType).alias(f.name) for f in fields]
         )
         return probe.select(self.bucket_expr().alias("b")).collect()[0][0]
 
@@ -581,7 +679,10 @@ class LakeTable:
         pruning: a pruned delta file's bounds exclude the key, so it
         cannot hold an upsert or delete for it. At 100 TB this is the
         GDPR subject-access / upsert-verification path: one hash, a few
-        footer-bounded files, one filter."""
+        footer-bounded files, one filter. For string and integral keys the
+        hash runs on the driver (:meth:`bucket_of`), so building the
+        returned DataFrame starts no Spark job; its own read is the
+        first."""
         from sqoop_spark.cdc.watermark import typed_lit
 
         if set(key) != set(self.key_columns):

@@ -4,6 +4,7 @@ CredentialProviderHelper — `hadoop credential` JCEKS flow)."""
 
 import argparse
 import json
+import logging
 import os
 import subprocess
 import sys
@@ -46,6 +47,41 @@ def test_wrong_store_password_fails_closed(tmp_path, monkeypatch):
     monkeypatch.setenv(ENV_STORE_PASSWORD, "wrong")
     with pytest.raises(CredentialError, match="integrity check failed"):
         fetch_credential(ks, "a")
+
+
+def test_explicit_empty_store_password_is_an_error(tmp_path, monkeypatch):
+    """An explicit '' store password must not silently fall through to
+    the environment or to the public default."""
+    ks = str(tmp_path / "store.json")
+    monkeypatch.setenv(ENV_STORE_PASSWORD, "from-env")
+    with pytest.raises(CredentialError, match="must not be empty"):
+        create_credential(ks, "a", "secret", store_password="")
+    assert not os.path.exists(ks)
+    create_credential(ks, "a", "secret")
+    with pytest.raises(CredentialError, match="must not be empty"):
+        fetch_credential(ks, "a", store_password="")
+
+
+def test_default_store_password_warns_once_per_call(tmp_path, monkeypatch, caplog):
+    ks = str(tmp_path / "store.json")
+    monkeypatch.delenv(ENV_STORE_PASSWORD, raising=False)
+
+    def warnings():
+        return [r for r in caplog.records
+                if r.levelno == logging.WARNING and "default" in r.getMessage()]
+
+    with caplog.at_level(logging.WARNING, logger="sqoop_spark.credentials"):
+        create_credential(ks, "a", "secret")
+        assert len(warnings()) == 1
+        caplog.clear()
+        assert fetch_credential(ks, "a") == "secret"
+        assert len(warnings()) == 1
+        caplog.clear()
+        # a real store password (explicit or from the env) is silent
+        create_credential(ks, "b", "x", store_password="hunter2")
+        monkeypatch.setenv(ENV_STORE_PASSWORD, "hunter2")
+        assert fetch_credential(ks, "b") == "x"
+        assert warnings() == []
 
 
 def test_tampered_entry_fails_closed(tmp_path):

@@ -200,3 +200,38 @@ def test_mor_order_col_validated(spark, scratch):
         merge_apply(eng.table, batch, batch_id=0, order_col="event_ts", strategy="mor")
     # nothing got fenced by the refused applies
     assert eng.table.fenced_batch_ids() == set()
+
+
+@pytest.mark.parametrize("kind", ["upsert", "delete", "empty"])
+def test_mor_buckets_touched_counts_batch_buckets(spark, scratch, kind):
+    """MoR runs no affected-bucket probe; ``buckets_touched`` counts the
+    buckets of the delta files it commits, which must equal the distinct
+    buckets of the batch keys (0 for an empty batch)."""
+    from pyspark.sql import types as T
+
+    from sqoop_spark.cdc.merge import merge_apply
+    from sqoop_spark.lake import LakeTable
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("v", T.StringType()),
+    ])
+    t = LakeTable.create(
+        spark, os.path.join(scratch, "bt"), schema, ["k"], num_buckets=8,
+        properties={"order_column": "seq"},
+    )
+    t.append(spark.createDataFrame([(f"k{i}", i, "v") for i in range(40)], schema))
+    keys = {"upsert": ["k1", "k2", "k3", "new", "k1"],
+            "delete": ["k5", "k6", "k30"], "empty": []}[kind]
+    op = "delete" if kind == "delete" else "upsert"
+    batch = spark.createDataFrame(
+        [(k, 100 + i, None if op == "delete" else "w", op)
+         for i, k in enumerate(keys)],
+        T.StructType(schema.fields + [T.StructField("op", T.StringType())]),
+    )
+    want = batch.select(t.bucket_expr().alias("b")).distinct().count()
+    assert want == len({t.bucket_of({"k": k}) for k in keys})
+    stats = merge_apply(t, batch, batch_id=1, order_col="seq", strategy="mor")
+    assert stats.buckets_touched == want
+    assert (want == 0) == (kind == "empty")
