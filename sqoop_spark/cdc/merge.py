@@ -35,7 +35,6 @@ Scale design:
 from __future__ import annotations
 
 import logging
-import os
 import time
 from dataclasses import dataclass
 from enum import Enum
@@ -85,42 +84,19 @@ class MergeStats:
 
 
 def _safe_observation(obs: Observation, timeout_s: float = 10.0) -> dict:
-    """Read an Observation without ever blocking the caller forever.
+    """Read an Observation without ever blocking or raising.
 
-    ``Observation.get`` (the supported API) waits on a row that (a) never
+    ``Observation.get`` (the supported API) waits on a row that never
     arrives when AQE's empty-relation propagation eliminated the
-    CollectMetrics node, and (b) never reaches the original session's bus
-    when the plan executed under ``foreachBatch``'s cloned session. Both
-    are survivable: try the public ``get`` first in a daemon thread with a
-    deadline, then fall back to polling the JVM's non-blocking
-    ``getRowOrEmpty``. A complete miss is WARN-logged (not silent) because
-    every counter then reports 0 and rows_in-based validation goes vacuous
-    — callers fall back to manifest-derived counts.
+    CollectMetrics node. So the row's EXISTENCE is polled first through
+    the JVM's non-blocking ``getRowOrEmpty`` (private but tiny surface),
+    bounded by ``timeout_s``; once it exists, the public ``get`` returns
+    immediately. The merge reads its Observations before its commit, so
+    a failure must not raise: it is WARN-logged (not silent) and reads as
+    ``{}``. Every counter then reports 0 and rows_in-based validation
+    goes vacuous — callers fall back to manifest-derived counts.
     """
-    import time as _t
-
-    def _public_get_with_deadline(budget_s: float) -> dict | None:
-        """Public ``obs.get`` in a daemon thread so a never-arriving row
-        can't block the caller."""
-        import threading
-
-        holder: dict = {}
-
-        def _run() -> None:
-            try:
-                holder["row"] = dict(obs.get)
-            except Exception as e:  # pragma: no cover - listener-state dependent
-                holder["err"] = e
-
-        th = threading.Thread(target=_run, daemon=True, name="obs-get")
-        th.start()
-        th.join(budget_s)
-        return holder.get("row")
-
-    # Probe row EXISTENCE non-blockingly (private but tiny surface); once it
-    # exists, the public get returns immediately — extraction always goes
-    # through the supported API and nothing runs concurrently.
-    deadline = _t.time() + timeout_s
+    deadline = time.time() + timeout_s
     try:
         jo = obs._jo
         if jo is None:
@@ -137,15 +113,10 @@ def _safe_observation(obs: Observation, timeout_s: float = 10.0) -> dict:
                     _log.debug("Observation row empty (AQE-eliminated subtree)")
                     return {}
                 return dict(obs.get)
-            if _t.time() >= deadline:
+            if time.time() >= deadline:
                 break
-            _t.sleep(0.05)
+            time.sleep(0.05)
     except Exception as e:
-        # Probe surface changed (PySpark upgrade) — fall back to the public
-        # get alone, still deadline-bounded.
-        row = _public_get_with_deadline(max(0.5, deadline - _t.time()))
-        if row is not None:
-            return row
         _log.warning(
             "Observation read failed (%s: %s); counters default to 0",
             type(e).__name__,
@@ -153,11 +124,19 @@ def _safe_observation(obs: Observation, timeout_s: float = 10.0) -> dict:
         )
         return {}
     _log.warning(
-        "Observation unavailable after %.1fs (eliminated metrics node or "
-        "unreachable listener bus); counters default to 0",
+        "Observation unavailable after %.1fs (eliminated metrics node); "
+        "counters default to 0",
         timeout_s,
     )
     return {}
+
+
+def _bucket_rows(entries: list[dict]) -> list[dict]:
+    """Per-bucket lineage rows ``[{bucket, rows_out}]`` of file entries."""
+    per_bucket: dict[int, int] = {}
+    for e in entries:
+        per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + e["rows"]
+    return [{"bucket": b, "rows_out": n} for b, n in sorted(per_bucket.items())]
 
 
 def newest_wins_reduce(
@@ -347,7 +326,6 @@ def _merge_apply_mor(
     post_reduce_transform,
     extra_summary: dict | None,
     auto_compact_threshold: int,
-    _mark,
     obs_timeout: float,
 ) -> MergeStats:
     """Merge-on-read apply: write the reduced batch as delta files.
@@ -365,40 +343,31 @@ def _merge_apply_mor(
         F.count(F.lit(1)).alias("rows_out"),
         F.sum(F.when(F.col(op_col) == "delete", 1).otherwise(0)).alias("deletes"),
     )
+    got: dict = {}
+
+    def lineage(entries: list[dict]) -> dict:
+        # The delta write job has filled both Observations: the counters
+        # go into the one manifest link.
+        got.update(_safe_observation(obs_out, obs_timeout))
+        got.update(_safe_observation(obs_in, obs_timeout))
+        return {
+            "batch_id": batch_id,
+            "buckets": _bucket_rows(entries),
+            "counters": {
+                "rows_in": int(got.get("events_in") or 0),
+                "delta_rows": int(got.get("rows_out") or 0),
+                "delete_markers": int(got.get("deletes") or 0),
+            },
+        }
+
     # Delta files are append-shaped (read-time resolution orders by the
     # order column), so a lost manifest race — realistically: against a
     # concurrently-running compactor — rebases safely onto the winner.
     manifest = table.append_delta(
         reduced, batch_id=batch_id, op_col=op_col, summary=extra_summary,
-        retry_conflicts=2,
+        lineage=lineage, retry_conflicts=2,
     )
-    _mark("delta-write+commit")
-    got = _safe_observation(obs_out, obs_timeout)
-    rows_out = int(got.get("rows_out") or 0)
-    deletes = int(got.get("deletes") or 0)
-    got_in = _safe_observation(obs_in, obs_timeout)
-    rows_in = int(got_in.get("events_in") or 0)
-
-    parent_paths = {x["path"] for x in table.manifest(manifest["parent"])["files"]}
-    new_files = [e for e in manifest["files"]
-                 if e.get("delta") and e["path"] not in parent_paths]
-    per_bucket: dict[int, int] = {}
-    for e in new_files:
-        per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + e["rows"]
-    table.patch_lineage(
-        manifest,
-        {
-            "batch_id": batch_id,
-            "buckets": [
-                {"bucket": b, "rows_out": n} for b, n in sorted(per_bucket.items())
-            ],
-            "counters": {
-                "rows_in": rows_in,
-                "delta_rows": rows_out,
-                "delete_markers": deletes,
-            },
-        },
-    )
+    counters = manifest["lineage"]["counters"]
 
     hot = [
         b
@@ -409,18 +378,18 @@ def _merge_apply_mor(
         # retry around a cross-process racer (another ingest stream or an
         # external maintain --compact); the in-process stream is serial
         table.compact(hot, retry_recompute=2)
-        _mark(f"auto-compact({len(hot)} buckets)")
 
+    deletes = counters["delete_markers"]
     return MergeStats(
         batch_id=batch_id,
-        rows_in=rows_in,
+        rows_in=counters["rows_in"],
         carried=0,
         updated=0,
-        inserted=rows_out - deletes,
+        inserted=counters["delta_rows"] - deletes,
         deleted=deletes,
-        buckets_touched=len(per_bucket),
+        buckets_touched=len(manifest["lineage"]["buckets"]),
         buckets_total=table.num_buckets,
-        counters_missing="events_in" not in got_in,
+        counters_missing="events_in" not in got,
     )
 
 
@@ -517,16 +486,6 @@ def merge_apply(
     an overlapping winner always surfaces for recompute. MoR delta
     commits rebase automatically (append-shaped).
     """
-    debug_timing = bool(os.environ.get("SQOOP_SPARK_DEBUG_TIMING"))
-    _t0 = time.time()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if debug_timing:
-            now = time.time()
-            print(f"[merge b={batch_id}] {phase}: {now - _t0:.2f}s", flush=True)
-            _t0 = now
-
     key_cols = table.key_columns
     if batch_id is not None and table.is_fenced(batch_id):
         raise EngineError(f"batch {batch_id} already applied (fenced)")
@@ -592,7 +551,6 @@ def merge_apply(
             r["_b"]
             for r in batch.select(table.bucket_expr().alias("_b")).distinct().collect()
         )
-    _mark("affected-probe")
 
     obs_in = Observation(f"merge-in-{batch_id}")
     batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events_in"))
@@ -630,7 +588,6 @@ def merge_apply(
             post_reduce_transform,
             extra_summary,
             auto_compact_threshold,
-            _mark,
             obs_timeout,
         )
     if post_reduce_transform is not None:
@@ -778,83 +735,74 @@ def merge_apply(
     )
     merged = merged.drop("_src")
 
-    _mark("plan-build")
-    lineage_entries: list[dict] = []
+    # Rows in carried files never flow through the plan: count them into
+    # `carried` (and symmetrically into old_rows) from manifest metadata,
+    # keeping `deleted = old - carried - updated` exact under file skip.
+    skipped_rows = sum(e["rows"] for e in carry_entries)
+    got_in: dict = {}
+
+    def lineage(entries: list[dict]) -> dict:
+        # The write job has filled every Observation, so the counters go
+        # into the one manifest link. AQE's empty-relation propagation can
+        # eliminate a CollectMetrics node when the merged subtree is empty
+        # (e.g. a batch that deletes every row of its buckets) — a missing
+        # observation reads as an empty write.
+        got = _safe_observation(obs, obs_timeout)
+        carried = int(got.get("carried") or 0) + skipped_rows
+        updated = int(got.get("updated") or 0)
+        got_old = _safe_observation(obs_old, obs_timeout)
+        if "old_rows" in got_old:
+            old_rows_touched = int(got_old.get("old_rows") or 0) + skipped_rows
+        elif any(e.get("delta") for e in touched_entries):
+            # Metrics node eliminated: with MoR deltas in the touched
+            # buckets logical rows are unknowable without a job, so count
+            # conservatively (deleted reports 0; state is still correct).
+            old_rows_touched = carried + updated
+        else:
+            # ... without deltas the BASE manifest's physical rows are exact.
+            old_rows_touched = sum(e["rows"] for e in base_entries)
+        got_in.update(_safe_observation(obs_in, obs_timeout))
+        # Per-bucket lineage of the committed buckets — after a disjoint
+        # rebase they still hold exactly the carried and written files: the
+        # per-partition checkpoint/lineage manifest with counters the north
+        # rule requires (upgrade of GenericJobStorage's job rows).
+        return {
+            "batch_id": batch_id,
+            "buckets": _bucket_rows(carry_entries + entries),
+            "counters": {
+                "rows_in": int(got_in.get("events_in") or 0),
+                "carried": carried,
+                "updated": updated,
+                "inserted": int(got.get("inserted") or 0),
+                "deleted": old_rows_touched - carried - updated,
+                "old_rows_touched": old_rows_touched,
+                # File-granular CoW observability: how many base files the
+                # key zone maps let this merge keep by reference (and their
+                # rows).
+                "files_carried": len(carry_entries),
+                "files_rewritten_from": len(touched_entries),
+                "rows_carried_by_file_skip": skipped_rows,
+            },
+        }
+
     manifest = table.overwrite_buckets(
         merged,
         affected,
         batch_id=batch_id,
         summary=extra_summary,
-        lineage=None,  # patched below once counters are known
+        lineage=lineage,
         base_version=base_version,
         retry_conflicts=commit_retry_disjoint,
         carry_entries=carry_entries,
     )
-    # AQE's empty-relation propagation can eliminate a CollectMetrics node
-    # when the merged subtree is empty (e.g. a batch that deletes every row
-    # of its buckets) — treat a missing observation as an empty write.
-    _mark("join+write+commit")
-    got = _safe_observation(obs, obs_timeout)
-    # Rows in carried files never flow through the plan: count them into
-    # `carried` (and symmetrically into old_rows) from manifest metadata,
-    # keeping `deleted = old - carried - updated` exact under file skip.
-    skipped_rows = sum(e["rows"] for e in carry_entries)
-    carried = int(got.get("carried") or 0) + skipped_rows
-    updated = int(got.get("updated") or 0)
-    inserted = int(got.get("inserted") or 0)
-    got_old = _safe_observation(obs_old, obs_timeout)
-    if "old_rows" in got_old:
-        old_rows_touched = int(got_old.get("old_rows") or 0) + skipped_rows
-    else:
-        # Metrics node eliminated (AQE empty-relation) or listener bus
-        # unreachable: fall back to the BASE manifest's physical rows —
-        # exact when the touched buckets held no MoR deltas; with deltas
-        # present, logical rows are unknowable without a job, so count
-        # conservatively (deleted reports 0; state is still correct).
-        had_delta = any(e.get("delta") for e in touched_entries)
-        if had_delta:
-            old_rows_touched = carried + updated
-        else:
-            old_rows_touched = sum(e["rows"] for e in base_entries)
-    deleted = old_rows_touched - carried - updated
-    got_in = _safe_observation(obs_in, obs_timeout)
-    rows_in = int(got_in.get("events_in") or 0)
-
-    # Per-bucket lineage from the freshly committed manifest's file rows —
-    # the per-partition checkpoint/lineage manifest with counters the north
-    # rule requires (upgrade of GenericJobStorage's job rows).
-    new_files = [e for e in manifest["files"] if e["bucket"] in set(affected)]
-    per_bucket: dict[int, int] = {}
-    for e in new_files:
-        per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + e["rows"]
-    lineage_entries = [
-        {"bucket": b, "rows_out": n} for b, n in sorted(per_bucket.items())
-    ]
-    counters = {
-        "rows_in": rows_in,
-        "carried": carried,
-        "updated": updated,
-        "inserted": inserted,
-        "deleted": deleted,
-        "old_rows_touched": old_rows_touched,
-        # File-granular CoW observability: how many base files the key
-        # zone maps let this merge keep by reference (and their rows).
-        "files_carried": len(carry_entries),
-        "files_rewritten_from": len(touched_entries),
-        "rows_carried_by_file_skip": skipped_rows,
-    }
-    table.patch_lineage(
-        manifest,
-        {"batch_id": batch_id, "buckets": lineage_entries, "counters": counters},
-    )
-
+    c = manifest["lineage"]["counters"]
     return MergeStats(
         batch_id=batch_id,
-        rows_in=int(rows_in or 0),
-        carried=carried,
-        updated=updated,
-        inserted=inserted,
-        deleted=deleted,
+        rows_in=c["rows_in"],
+        carried=c["carried"],
+        updated=c["updated"],
+        inserted=c["inserted"],
+        deleted=c["deleted"],
         buckets_touched=len(affected),
         buckets_total=table.num_buckets,
         counters_missing="events_in" not in got_in,

@@ -38,7 +38,7 @@ import os
 import re
 import uuid
 from dataclasses import dataclass
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -306,7 +306,7 @@ class LakeTable:
         target = os.path.join(self.manifest_dir, f"v{v:08d}.json")
         tmp = target + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
+            json.dump(manifest, f, separators=(",", ":"))
         try:
             # Atomic commit point: exclusive link of the version file.
             os.link(tmp, target)
@@ -479,7 +479,7 @@ class LakeTable:
             base["files"],
             batch_id,
             {"properties_updated": sorted(updates)},
-            base.get("lineage"),
+            None,
             base=base,
             properties=props,
         )
@@ -644,26 +644,31 @@ class LakeTable:
             )
         return out
 
-    def bucket_of(self, key: dict) -> int:
+    def bucket_of(self, key: dict, version: int | None = None) -> int:
         """The bucket a full key tuple hashes to under the writer's
-        expression ``pmod(xxhash64(cast(str(v) AS type)), B)``. String and
-        in-range integral keys hash on the driver (:func:`driver_bucket`,
-        no Spark job); any other key type is one JVM literal projection
-        over ``spark.range(1)`` with the same cast — no table scan either
-        way."""
-        schema = self.schema()
-        fields = [schema[c] for c in self.key_columns]
+        expression ``pmod(xxhash64(cast(str(v) AS type)), B)``, with the
+        key columns, schema and ``B`` of snapshot ``version`` (default:
+        current) — a rebucketed table's older snapshots keep their own
+        layout. String and in-range integral keys hash on the driver
+        (:func:`driver_bucket`, no Spark job); any other key type is one
+        JVM literal projection over ``spark.range(1)`` with the same cast
+        — no table scan either way."""
+        m = self.manifest(version)
+        schema = self.schema(m["version"])
+        fields = [schema[c] for c in m["key_columns"]]
+        nb = m["num_buckets"]
         b = driver_bucket(
-            [key[f.name] for f in fields],
-            [f.dataType for f in fields],
-            self.num_buckets,
+            [key[f.name] for f in fields], [f.dataType for f in fields], nb
         )
         if b is not None:
             return b
         probe = self.spark.range(1).select(
             *[F.lit(str(key[f.name])).cast(f.dataType).alias(f.name) for f in fields]
         )
-        return probe.select(self.bucket_expr().alias("b")).collect()[0][0]
+        keys = [F.col(f.name) for f in fields]
+        return probe.select(
+            F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int").alias("b")
+        ).collect()[0][0]
 
     def lookup(self, key: dict, version: int | None = None) -> DataFrame:
         """Point read of one key: rows of the logical state whose key
@@ -693,7 +698,7 @@ class LakeTable:
         if any(v is None for v in key.values()):
             raise EngineError("lookup: NULL key values never match (keys are non-null)")
         schema = self.schema(version)
-        bucket = self.bucket_of(key)
+        bucket = self.bucket_of(key, version)
         entries = self._entries(version, buckets={bucket})
 
         from sqoop_spark.lake.pruning import _MISSING, canon_literal
@@ -775,7 +780,9 @@ class LakeTable:
             eq = {c: v[0] for c, op, v in terms if op == "="}
             if all(c in eq and eq[c] is not None for c in self.key_columns):
                 try:
-                    b = self.bucket_of({c: eq[c] for c in self.key_columns})
+                    b = self.bucket_of(
+                        {c: eq[c] for c in self.key_columns}, version
+                    )
                 except Exception:
                     b = None  # uncastable literal — fail open
                 if b is not None:
@@ -1295,6 +1302,11 @@ class LakeTable:
         base: dict | None = None,
         properties: dict | None = None,
     ) -> dict:
+        """Commit ``files`` as the next snapshot in ONE exclusive manifest
+        link (:meth:`_write_manifest`); a committed manifest is never
+        rewritten. ``lineage`` (per-bucket rows and the batch's
+        ``counters``) is stored as given, and its ``counters`` are merged
+        into ``summary``, so a visible snapshot always carries them."""
         # ``base`` pins the manifest this commit was computed against: the
         # new version is base.version+1, so ANY commit that landed after
         # the caller read its state makes the atomic link fail
@@ -1320,7 +1332,11 @@ class LakeTable:
                 properties if properties is not None else m.get("properties", {})
             ),
             "files": files,
-            "summary": {**(summary or {}), "batch_id": batch_id},
+            "summary": {
+                **(summary or {}),
+                "batch_id": batch_id,
+                **((lineage or {}).get("counters") or {}),
+            },
             "fenced_batch_ids": fenced,
             "lineage": lineage,
         }
@@ -1429,7 +1445,6 @@ class LakeTable:
         df: DataFrame,
         batch_id: int | None = None,
         summary: dict | None = None,
-        lineage: dict | None = None,
         retry_conflicts: int = 0,
     ) -> dict:
         """Append-only commit (Sqoop `--incremental append` sink semantics).
@@ -1441,7 +1456,7 @@ class LakeTable:
         nb = self.num_buckets  # the numbering _prepare_df buckets under
         entries = self._write_data_files(self._prepare_df(df))
         return self._commit_append_shaped(
-            "append", entries, batch_id, summary, lineage, retry_conflicts, nb
+            "append", entries, batch_id, summary, None, retry_conflicts, nb
         )
 
     def append_delta(
@@ -1450,7 +1465,7 @@ class LakeTable:
         batch_id: int | None = None,
         op_col: str = "op",
         summary: dict | None = None,
-        lineage: dict | None = None,
+        lineage: Callable[[list[dict]], dict] | None = None,
         retry_conflicts: int = 0,
     ) -> dict:
         """Merge-on-read upsert commit: append newest-wins delta files.
@@ -1467,6 +1482,11 @@ class LakeTable:
         Delta files are append-shaped (read-time resolution orders by the
         order column, never by commit order), so ``retry_conflicts`` safely
         rebases onto a concurrent winner exactly like :meth:`append`.
+
+        ``lineage(entries)`` builds the commit's lineage from the freshly
+        written delta entries. It runs once, after the write and before
+        the first commit attempt, so its ``counters`` land in the one
+        atomic manifest link (see :meth:`_commit`).
         """
         if op_col not in df.columns:
             df = df.withColumn(op_col, F.lit("upsert"))
@@ -1476,8 +1496,8 @@ class LakeTable:
         )
         entries = self._write_data_files(prepared, delta=True)
         return self._commit_append_shaped(
-            "delta-append", entries, batch_id, summary, lineage,
-            retry_conflicts, nb,
+            "delta-append", entries, batch_id, summary,
+            lineage(entries) if lineage else None, retry_conflicts, nb,
         )
 
     def compact(
@@ -1825,7 +1845,7 @@ class LakeTable:
         buckets: Iterable[int],
         batch_id: int | None = None,
         summary: dict | None = None,
-        lineage: dict | None = None,
+        lineage: Callable[[list[dict]], dict] | None = None,
         base_version: int | None = None,
         retry_conflicts: int = 0,
         carry_entries: list[dict] | None = None,
@@ -1850,6 +1870,12 @@ class LakeTable:
         conflict validation); a winner that changed OUR buckets' files
         still raises, because ``df`` was computed against state that no
         longer exists.
+
+        ``lineage(entries)`` builds the commit's lineage from the freshly
+        written entries. It runs once, after the write and before the
+        first commit attempt (every re-attempt reuses it), so its
+        ``counters`` land in the one atomic manifest link (see
+        :meth:`_commit`).
         """
         bs = set(int(b) for b in buckets)
         base = self.manifest(base_version)
@@ -1870,6 +1896,7 @@ class LakeTable:
         stray = {e["bucket"] for e in entries} - bs
         if stray:
             raise EngineError(f"overwrite produced rows outside bucket set: {stray}")
+        lin = lineage(entries) if lineage else None
 
         def ours(m: dict) -> set[str]:
             return {e["path"] for e in m["files"] if e["bucket"] in bs}
@@ -1899,7 +1926,7 @@ class LakeTable:
             attempts += 1
             carried = [e for e in current["files"] if e["bucket"] not in bs]
             return self._commit(
-                "merge", carried + keep + entries, batch_id, summary, lineage,
+                "merge", carried + keep + entries, batch_id, summary, lin,
                 base=current,
             )
 
@@ -2379,25 +2406,6 @@ class LakeTable:
 
         return self._rewrite("merge-into", retry_recompute, batch_id, summary, plan)
 
-    def patch_lineage(
-        self, manifest: dict, lineage: dict, merge_summary: bool = True
-    ) -> None:
-        """Attach advisory lineage/counters to an already-committed manifest.
-
-        Lineage is metadata about the commit, not part of the atomic swap —
-        the commit's correctness never depends on it, so an in-place
-        rewrite (tmp + rename) of the committed manifest file is safe.
-        """
-        manifest["lineage"] = lineage
-        if merge_summary and lineage.get("counters"):
-            manifest["summary"] = {**manifest.get("summary", {}), **lineage["counters"]}
-        path = os.path.join(self.manifest_dir, f"v{manifest['version']:08d}.json")
-        tmp = path + ".lineage.tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, path)
-        self._manifest_cache[manifest["version"]] = manifest
-
     # -- rollback / refs -------------------------------------------------------------
 
     def rollback_to(self, version: int) -> dict:
@@ -2536,7 +2544,6 @@ class LakeTable:
         batch_id: int | None = None,
         op_col: str = "op",
         summary: dict | None = None,
-        lineage: dict | None = None,
     ) -> dict:
         """Write a batch as a STAGED commit (write-audit-publish stage 1).
 
@@ -2585,7 +2592,6 @@ class LakeTable:
             "num_buckets": nb,
             "base_version": base_version,
             "summary": summary,
-            "lineage": lineage,
         }
         os.makedirs(self._staged_dir, exist_ok=True)
         target = self._staged_path(wap_id)
@@ -2700,7 +2706,7 @@ class LakeTable:
         def attempt() -> dict:
             return already_published() or self._commit_append_shaped(
                 st["operation"], st["entries"], st["batch_id"], summary,
-                st["lineage"], 0, st["num_buckets"],
+                None, 0, st["num_buckets"],
             )
 
         m = self._retrying(retry_conflicts, attempt)

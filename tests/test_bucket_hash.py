@@ -3,8 +3,9 @@ Spark expression ``pmod(xxhash64(keys), B)`` bit for bit, or point
 lookups would prune to the wrong bucket and silently miss rows.
 
 Also pins that ``bucket_of`` and building a ``lookup`` DataFrame start no
-Spark job for string and integral keys, and that the JVM fallback (date,
-decimal keys) still returns the bucket the writer assigned.
+Spark job for string and integral keys, that the JVM fallback (date,
+decimal keys) still returns the bucket the writer assigned, and that a
+snapshot read before a ``rebucket`` hashes under that snapshot's layout.
 """
 
 import datetime
@@ -115,10 +116,10 @@ def test_driver_bucket_declines_other_types():
     assert driver_bucket(["x"], [T.StringType("UTF8_LCASE")], 4) is None
 
 
-def _writer_buckets(t, col):
+def _writer_buckets(t, col, version=None):
     """key value -> the bucket the writer filed its row under."""
     out = {}
-    for e in t._entries():
+    for e in t._entries(version):
         for v in pq.read_table(os.path.join(t.path, e["path"])).column(col):
             out[v.as_py()] = e["bucket"]
     return out
@@ -198,3 +199,37 @@ def test_point_lookup_runs_no_job_before_its_read(spark, scratch, dtype, keys):
         df, jobs = _jobs_in_group(spark, f"lookup-{i}", lambda: t.lookup({"k": k}))
         assert jobs == 0
         assert [r.v for r in df.collect()] == [i]
+
+
+def _kv_table(spark, scratch, dtype, keys):
+    schema = T.StructType(
+        [T.StructField("k", dtype), T.StructField("v", T.LongType())]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(scratch, "t"), schema, ["k"], num_buckets=4
+    )
+    t.append(spark.createDataFrame([(k, i) for i, k in enumerate(keys)], schema))
+    return t
+
+
+def test_old_version_lookup_and_scan_after_rebucket(spark, scratch):
+    keys = [f"key-{i}" for i in range(40)]
+    t = _kv_table(spark, scratch, T.StringType(), keys)
+    old = t.current_version()
+    t.rebucket(7)
+    assert (t.num_buckets, t.manifest(old)["num_buckets"]) == (7, 4)
+    for i, k in enumerate(keys):
+        assert [r.v for r in t.lookup({"k": k}, version=old).collect()] == [i], k
+        assert [r.v for r in t.scan(f"k = '{k}'", version=old).collect()] == [i], k
+
+
+def test_bucket_of_fallback_uses_the_versions_bucket_count(spark, scratch):
+    keys = [datetime.date(2021, 1, 1) + datetime.timedelta(days=31 * i)
+            for i in range(10)]
+    t = _kv_table(spark, scratch, T.DateType(), keys)
+    old = t.current_version()
+    t.rebucket(7)
+    written = _writer_buckets(t, "k", old)
+    assert len(set(written.values())) > 1
+    for k, b in written.items():
+        assert t.bucket_of({"k": k}, old) == b, k
