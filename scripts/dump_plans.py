@@ -13,12 +13,13 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from sqoop_spark.session import build_session  # noqa: E402
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
-SCRATCH = "/root/repo/.scratch/plans"
+OUT = os.path.join(ROOT, "PLANS.md")
+SCRATCH = os.path.join(ROOT, ".scratch", "plans")
 
 
 def formatted(df) -> str:

@@ -1230,10 +1230,13 @@ def cmd_describe(args) -> int:
 
 
 def cmd_lookup(args) -> int:
-    """Point lookup of one key: bucket prune + key zone-map file skip,
-    then the normal MoR-resolved read filtered to the key. Prints the
-    matching rows as JSON lines (the GDPR subject-access / upsert
-    verification path — O(1 bucket, few files), never a table scan)."""
+    """Point lookup of one key: bucket prune + key zone-map and bloom file
+    skip, then a driver-side read of the surviving files with newest-wins
+    resolved on the driver (no Spark job for the read). ``--key`` values
+    are cast to the key columns' types. Prints the matching rows as JSON
+    lines plus a matched/files-opened/files-total summary on stderr (the
+    GDPR subject-access / upsert verification path — O(1 bucket, few
+    files), never a table scan)."""
     from sqoop_spark.lake import LakeTable
 
     if not LakeTable.exists(args.path):
@@ -1245,10 +1248,20 @@ def cmd_lookup(args) -> int:
             raise SystemExit(f"lookup: --key expects column=value, got {item!r}")
         key[col.strip()] = val
     t = LakeTable(_session(args), args.path)
+    opened = len(t.lookup_entries(key, version=args.version))
     rows = t.lookup(key, version=args.version).collect()
     for r in rows:
         print(json.dumps(r.asDict(), default=str))
-    print(json.dumps({"matched": len(rows)}), file=sys.stderr)
+    print(
+        json.dumps(
+            {
+                "matched": len(rows),
+                "files_opened": opened,
+                "files_total": len(t.manifest(args.version)["files"]),
+            }
+        ),
+        file=sys.stderr,
+    )
     return 0
 
 

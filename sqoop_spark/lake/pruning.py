@@ -139,14 +139,24 @@ def parse_terms(where: str) -> list[Term]:
     return [t for t in terms if all(v is not None for v in t[2])]
 
 
-def canon_timestamp_literal(v) -> str | None:
+def canon_timestamp_literal(v, tz: str | None = None) -> str | None:
     """A string literal probing a TIMESTAMP column, canonicalized to the
     manifest's stored bound encoding (``datetime.isoformat()``, ``T``
     separator), or None — *fail open* — when it cannot be proven
     order-equivalent: non-string literals, unparseable forms, and
-    timezone-aware literals (the stored bounds are naive, so mixing
-    offsets breaks lexicographic==chronological)."""
+    timezone-aware literals.
+
+    ``tz`` is the session time zone for a ``TimestampType`` column, None
+    for ``TimestampNTZType``. Footer bounds of a ``TimestampType`` column
+    are UTC instants and carry their offset ('...T00:00:00+00:00'), so
+    the literal is read in ``tz`` as Spark's cast reads it and spelled
+    as the same UTC instant; a naive spelling would sort BEFORE an equal
+    bound (it is a prefix of it) and wrongly skip the file whose min it
+    equals. A wall-clock time that ``tz`` skips or repeats (a DST gap or
+    overlap), or a zone Python cannot resolve, fails open. NTZ bounds
+    are naive and the literal stays naive."""
     import datetime as dt
+    from zoneinfo import ZoneInfo
 
     if not isinstance(v, str):
         return None
@@ -156,7 +166,16 @@ def canon_timestamp_literal(v) -> str | None:
         return None
     if parsed.utcoffset() is not None:
         return None
-    return parsed.isoformat()
+    if tz is None:
+        return parsed.isoformat()
+    try:
+        zone = ZoneInfo(tz)
+    except (ValueError, LookupError):
+        return None
+    local = parsed.replace(tzinfo=zone)
+    if local.utcoffset() != local.replace(fold=1).utcoffset():
+        return None
+    return local.astimezone(dt.timezone.utc).isoformat()
 
 
 def canon_date_literal(v) -> str | None:
@@ -179,31 +198,45 @@ def canon_date_literal(v) -> str | None:
 _MISSING = object()
 
 
-def canon_literal(value, dtype):
+def canon_literal(value, dtype, tz: str = "UTC"):
     """One literal canonicalized against a column's Spark type for
     comparison with the manifest's stored bound encoding — the single
-    dispatch rule shared by scan (normalize_terms), lookup and
-    prune_entries/read_since:
+    dispatch rule shared by scan (normalize_terms) and
+    prune_entries/read_since (lookup compares the key already cast to
+    the column's type). ``tz`` is the session time zone a string literal
+    on a ``TimestampType`` column is read in:
 
-    - string probing Timestamp/TimestampNTZ → :func:`canon_timestamp_literal`
+    - string probing Timestamp → :func:`canon_timestamp_literal` in ``tz``
+    - string probing TimestampNTZ → :func:`canon_timestamp_literal`, naive
     - string probing Date → :func:`canon_date_literal`
+    - a ``datetime`` probing a temporal column → its isoformat string,
+      as above (``typed_lit`` hands Spark the same string to cast)
     - anything else → unchanged (``_MISSING`` sentinel distinguishes
       "not a temporal-string case" from "canonicalization failed")
 
     Returns the canonical value, or None when the literal should
     contribute no pruning (fail open), or ``_MISSING`` when the rule
     does not apply and the caller's default encoding should be used."""
+    import datetime as dt
+
     from pyspark.sql import types as T
 
+    temporal = (T.TimestampType, T.TimestampNTZType, T.DateType)
+    if isinstance(value, dt.datetime) and isinstance(dtype, temporal):
+        value = value.isoformat()
     if isinstance(value, str):
-        if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        if isinstance(dtype, T.TimestampType):
+            return canon_timestamp_literal(value, tz)
+        if isinstance(dtype, T.TimestampNTZType):
             return canon_timestamp_literal(value)
         if isinstance(dtype, T.DateType):
             return canon_date_literal(value)
     return _MISSING
 
 
-def normalize_terms(terms: list[Term], schema) -> list[Term]:
+def normalize_terms(
+    terms: list[Term], schema, tz: str = "UTC"
+) -> list[Term]:
     """Type-aware literal canonicalization against the table's Spark
     schema — the fix for comparing SQL string literals to zone-map bounds
     whose on-manifest encoding differs from the literal's spelling.
@@ -211,7 +244,8 @@ def normalize_terms(terms: list[Term], schema) -> list[Term]:
     ('T' separator), so a probe like ``ts <= '2024-06-15 23:00:00'``
     (which Spark happily casts and matches) would raw-string-compare
     wrongly (' ' sorts before 'T'). Each such literal is re-spelled in
-    the stored form; a term whose literal cannot be canonicalized (or a
+    the stored form — for a ``TimestampType`` column, the UTC instant it
+    names in session time zone ``tz``, with the bounds' '+00:00'; a term whose literal cannot be canonicalized (or a
     numeric literal probing a temporal column) is DROPPED — fail open,
     the predicate is always re-applied in-plan. Terms probing columns
     absent from the schema pass through untouched (no stat will exist
@@ -230,7 +264,7 @@ def normalize_terms(terms: list[Term], schema) -> list[Term]:
         ):
             out.append((col, op, vals))
             continue
-        canon = [canon_literal(v, dtype) for v in vals]
+        canon = [canon_literal(v, dtype, tz) for v in vals]
         # numeric literals probing a temporal column reach here as
         # _MISSING — incomparable with the string bounds, drop the term
         if all(c is not None and c is not _MISSING for c in canon):

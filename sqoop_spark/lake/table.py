@@ -41,10 +41,12 @@ from dataclasses import dataclass
 from typing import Any, Callable, Iterable
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
 from sqoop_spark.errors import (
     ConcurrentCommitError,
@@ -109,6 +111,22 @@ def _footer_column_stats(meta, wanted: list[str]) -> dict[str, list]:
         if ok and lo is not None:
             out[name] = [lo, hi]
     return out
+
+
+def _column_map(
+    current: list[dict], written: dict[str, str]
+) -> list[tuple[dict, str | None]]:
+    """The one schema-evolution mapping of a data file to the snapshot's
+    schema, shared by the Spark reader (:meth:`LakeTable._read_files`)
+    and the driver-side point read (:meth:`LakeTable.lookup`): for each
+    current field (manifest ``{"id", "name", "type"}``), the name the
+    file wrote it under — matched by column id from the entry's
+    ``columns`` map, so renames resolve and dropped columns never appear
+    — or None when the file predates the column (read as NULL). Readers
+    cast the written column to the current type, which is how a widened
+    column reads."""
+    by_id = {int(k): v for k, v in written.items()}
+    return [(f, by_id.get(f["id"])) for f in current]
 
 
 @dataclass
@@ -391,7 +409,7 @@ class LakeTable:
             groups.setdefault(sig, []).append(e)
         parts = []
         for sig, group in groups.items():
-            id_to_written = {int(k): v for k, v in group[0]["columns"].items()}
+            cols = _column_map(current, group[0]["columns"])
             is_delta = bool(group[0].get("delta"))
             paths = [os.path.join(self.path, e["path"]) for e in group]
             # Explicit read schema under the WRITTEN names with the CURRENT
@@ -402,29 +420,23 @@ class LakeTable:
             # tracks names, not widths), where footer inference would pick
             # whichever generation it sampled first and crash on the other.
             read_fields = [
-                T.StructField(
-                    id_to_written[f["id"]], _type_from_ddl(f["type"])
-                )
-                for f in current
-                if f["id"] in id_to_written
+                T.StructField(w, _type_from_ddl(f["type"]))
+                for f, w in cols
+                if w is not None
             ]
             if is_delta:
                 read_fields.append(T.StructField("_op", T.StringType()))
             raw = self.spark.read.schema(T.StructType(read_fields)).parquet(
                 *paths
             )
-            proj = []
-            for f in current:
-                written = id_to_written.get(f["id"])
-                if written is not None and written in raw.columns:
-                    proj.append(F.col(written).cast(f["type"]).alias(f["name"]))
-                else:
-                    proj.append(F.lit(None).cast(f["type"]).alias(f["name"]))
+            proj = [
+                (F.col(w) if w is not None else F.lit(None))
+                .cast(f["type"])
+                .alias(f["name"])
+                for f, w in cols
+            ]
             if with_op:
-                if is_delta and "_op" in raw.columns:
-                    proj.append(F.col("_op"))
-                else:
-                    proj.append(F.lit("upsert").alias("_op"))
+                proj.append(F.col("_op") if is_delta else F.lit("upsert").alias("_op"))
             parts.append(raw.select(*proj))
         df = parts[0]
         for p in parts[1:]:
@@ -553,6 +565,11 @@ class LakeTable:
         """
         return self._read_state(None, set(buckets))
 
+    def _session_tz(self) -> str:
+        """The session time zone Spark reads a string literal on a
+        TIMESTAMP column in — what zone-map pruning must read it in too."""
+        return self.spark.conf.get("spark.sql.session.timeZone")
+
     def prune_entries(
         self, entries: list[dict], column: str, lower=None, upper=None
     ) -> list[dict]:
@@ -575,7 +592,7 @@ class LakeTable:
                 dtype = self.schema()[column].dataType
             except Exception:
                 return _json_stat(v)
-            jv = canon_literal(v, dtype)
+            jv = canon_literal(v, dtype, self._session_tz())
             return _json_stat(v) if jv is _MISSING else jv
 
         lo, hi = _bound(lower), _bound(upper)
@@ -653,66 +670,77 @@ class LakeTable:
         (:func:`driver_bucket`, no Spark job); any other key type is one
         JVM literal projection over ``spark.range(1)`` with the same cast
         — no table scan either way."""
+        return self._key_probe(key, version, literals=False)[0]
+
+    def _key_probe(
+        self, key: dict, version: int | None, literals: bool = True
+    ) -> tuple[int, list[pa.Scalar]]:
+        """``(bucket, literals)`` of a full key tuple under snapshot
+        ``version``: the :meth:`bucket_of` bucket and, per key column, the
+        key value as an Arrow scalar of the column's type — what the
+        driver-side read of :meth:`lookup` compares against. A ``str`` on
+        a string column and an in-range ``int`` on an integral column are
+        taken as they are; any other value or key type (a CLI string on
+        an int or date key, a date, a decimal) comes back cast by the same
+        one-job JVM projection that hashes it, so the compared value is
+        exactly the one that was hashed."""
         m = self.manifest(version)
         schema = self.schema(m["version"])
-        fields = [schema[c] for c in m["key_columns"]]
+        types = [schema[c].dataType for c in m["key_columns"]]
+        vals = [key[c] for c in m["key_columns"]]
         nb = m["num_buckets"]
-        b = driver_bucket(
-            [key[f.name] for f in fields], [f.dataType for f in fields], nb
-        )
-        if b is not None:
-            return b
-        probe = self.spark.range(1).select(
-            *[F.lit(str(key[f.name])).cast(f.dataType).alias(f.name) for f in fields]
-        )
-        keys = [F.col(f.name) for f in fields]
-        return probe.select(
-            F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int").alias("b")
-        ).collect()[0][0]
+        b = driver_bucket(vals, types, nb)
+        if b is not None and not literals:
+            return b, []
+        if b is not None and all(
+            isinstance(v, str) == isinstance(t, T.StringType)
+            for v, t in zip(vals, types)
+        ):
+            return b, [pa.scalar(v, to_arrow_type(t)) for v, t in zip(vals, types)]
+        keys = [
+            F.lit(str(v)).cast(t).alias(f"k{i}")
+            for i, (v, t) in enumerate(zip(vals, types))
+        ]
+        row = self.spark.range(1).select(
+            F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int"), *keys
+        ).toArrow()
+        return row.column(0)[0].as_py(), [
+            row.column(i + 1)[0].cast(to_arrow_type(t))
+            for i, t in enumerate(types)
+        ]
 
-    def lookup(self, key: dict, version: int | None = None) -> DataFrame:
-        """Point read of one key: rows of the logical state whose key
-        columns equal ``key`` — O(1 bucket, few files), never O(table).
+    def lookup_entries(self, key: dict, version: int | None = None) -> list[dict]:
+        """The manifest entries :meth:`lookup` opens for ``key`` — its
+        pruning half on its own, for file-skip checks and operators
+        (``lookup`` returns a driver-built frame, which lists no input
+        files)."""
+        return self._lookup_prune(key, self.manifest(version))[1]
 
-        Two prunes before any data IO: the key hashes to exactly ONE
-        bucket (the Iceberg bucket-transform partition prune), and within
-        it the per-file key zone maps recorded at write time skip files
-        whose ``[min, max]`` cannot contain the value (conjunctive over
-        every key column; fail-open where a stat is absent — e.g. files
-        written before key stats existed). The surviving entries resolve
-        through the normal MoR machinery, which stays correct under
-        pruning: a pruned delta file's bounds exclude the key, so it
-        cannot hold an upsert or delete for it. At 100 TB this is the
-        GDPR subject-access / upsert-verification path: one hash, a few
-        footer-bounded files, one filter. For string and integral keys the
-        hash runs on the driver (:meth:`bucket_of`), so building the
-        returned DataFrame starts no Spark job; its own read is the
-        first."""
-        from sqoop_spark.cdc.watermark import typed_lit
-
-        if set(key) != set(self.key_columns):
+    def _lookup_prune(
+        self, key: dict, m: dict
+    ) -> tuple[list[pa.Scalar], list[dict]]:
+        """Key literals and the entries of manifest ``m`` a point read of
+        ``key`` must open: the key's ONE bucket, minus files whose key zone
+        maps or key blooms exclude it, minus tombstone files unless a
+        non-tombstone delta survives (then the bucket resolves, and a
+        retained delete marker takes part)."""
+        keys = m["key_columns"]
+        if set(key) != set(keys):
             raise EngineError(
-                f"lookup: need exactly the key columns {self.key_columns}, "
-                f"got {sorted(key)}"
+                f"lookup: need exactly the key columns {keys}, got {sorted(key)}"
             )
         if any(v is None for v in key.values()):
             raise EngineError("lookup: NULL key values never match (keys are non-null)")
-        schema = self.schema(version)
-        bucket = self.bucket_of(key, version)
-        entries = self._entries(version, buckets={bucket})
-
-        from sqoop_spark.lake.pruning import _MISSING, canon_literal
+        bucket, lits = self._key_probe(key, m["version"])
+        # zone-map bounds from the cast key, decoded by pyarrow exactly as
+        # the footer stats were (a timestamp bound carries its UTC offset)
+        bounds = {c: _json_stat(lit.as_py()) for c, lit in zip(keys, lits)}
 
         def keep(e: dict) -> bool:
-            for c, v in key.items():
+            for c, jv in bounds.items():
                 st = (e.get("stats") or {}).get(c)
-                if not st:
+                if not st or jv is None:
                     continue  # fail-open
-                jv = canon_literal(v, schema[c].dataType)
-                if jv is _MISSING:
-                    jv = _json_stat(v)
-                if jv is None:
-                    continue
                 mn, mx = st
                 if jv < mn or jv > mx:
                     return False
@@ -722,13 +750,105 @@ class LakeTable:
         key_terms = [(c, "=", [v]) for c, v in key.items()]
         pruned = [
             e
-            for e in entries
-            if keep(e) and not self._bloom_excludes(e, key_terms, bloom_cache)
+            for e in m["files"]
+            if e["bucket"] == bucket
+            and keep(e)
+            and not self._bloom_excludes(e, key_terms, bloom_cache)
         ]
-        pred = F.lit(True)
-        for c, v in key.items():
-            pred = pred & (F.col(c) == typed_lit(v, schema[c].dataType))
-        return self._state_of_entries(pruned, version).filter(pred)
+        if not self._resolve_buckets(pruned):
+            pruned = [e for e in pruned if not e.get("tombstone")]
+        return lits, pruned
+
+    def lookup(self, key: dict, version: int | None = None) -> DataFrame:
+        """Point read of one key: rows of the logical state whose key
+        columns equal ``key`` — O(1 bucket, few files), never O(table),
+        and no Spark job.
+
+        Two prunes before any data IO (:meth:`lookup_entries`): the key
+        hashes to exactly ONE bucket (the Iceberg bucket-transform
+        partition prune), and within it the per-file key zone maps and
+        key blooms recorded at write time skip files that cannot contain
+        the value (conjunctive over every key column; fail-open where a
+        stat is absent). The driver then reads the surviving files with
+        pyarrow: key columns first, the other columns only from the row
+        groups that hold the key, mapped to the snapshot's schema by
+        column id (:func:`_column_map`). When a non-tombstone delta
+        survives, newest-wins resolves on the driver with the rule of
+        :meth:`_resolve_winners` (highest order value, NULLs last, ties to
+        ``_op`` descending) and a winning delete returns no row; pruning
+        keeps this correct, since a pruned delta's bounds exclude the key.
+        A plain bucket returns every matching row. At 100 TB this is the
+        GDPR subject-access / upsert-verification path: one hash, a few
+        footer-bounded files. String and integral keys compare as given;
+        other keys are cast by the one JVM projection that hashes them
+        (:meth:`_key_probe`). The rows come back as a DataFrame built from
+        the Arrow table, which starts no job to build or collect."""
+        m = self.manifest(version)
+        lits, entries = self._lookup_prune(key, m)
+        schema = self.schema(m["version"])
+        target = to_arrow_schema(schema)
+        resolve = bool(self._resolve_buckets(entries))
+        if resolve:
+            target = target.append(pa.field("_op", pa.string()))
+        parts = [
+            t
+            for e in entries
+            for t in self._key_rows(e, m, lits, target, resolve)
+        ]
+        rows = pa.concat_tables(parts) if parts else target.empty_table()
+        if resolve:
+            top = rows.sort_by(
+                [(self.order_column, "descending"), ("_op", "descending")]
+            ).slice(0, 1)
+            live = top.num_rows and top["_op"][0].as_py() not in (None, "delete")
+            rows = (top if live else top.slice(0, 0)).drop_columns(["_op"])
+        return self.spark.createDataFrame(rows, schema=schema)
+
+    def _key_rows(
+        self,
+        e: dict,
+        m: dict,
+        lits: list[pa.Scalar],
+        target: pa.Schema,
+        with_op: bool,
+    ) -> list[pa.Table]:
+        """Rows of entry ``e`` whose key columns equal ``lits``, as Arrow
+        tables of ``target`` (the snapshot's schema, plus ``_op`` when
+        ``with_op``; base files read as 'upsert'). Reads the key columns
+        of every row group and everything else only where a key matched."""
+        cols = _column_map(m["schema"]["fields"], e["columns"])
+        written = {f["name"]: w for f, w in cols}
+        key_written = [written[c] for c in m["key_columns"]]
+        read = [w for _, w in cols if w is not None]
+        if with_op and e.get("delta"):
+            read.append("_op")
+        out = []
+        with pq.ParquetFile(
+            os.path.join(self.path, e["path"]), coerce_int96_timestamp_unit="us"
+        ) as pf:
+            for i in range(pf.num_row_groups):
+                kt = pf.read_row_group(i, columns=key_written)
+                mask = functools.reduce(pc.and_, [
+                    pc.equal(kt.column(j).cast(lit.type), lit)
+                    for j, lit in enumerate(lits)
+                ])
+                if not pc.any(mask).as_py():
+                    continue
+                rg = pf.read_row_group(i, columns=read).filter(mask)
+                arrays = [
+                    rg.column(w).cast(tf.type)
+                    if w is not None
+                    else pa.nulls(rg.num_rows, tf.type)
+                    for (_, w), tf in zip(cols, target)
+                ]
+                if with_op:
+                    arrays.append(
+                        rg.column("_op").cast(pa.string())
+                        if e.get("delta")
+                        else pa.array(["upsert"] * rg.num_rows, pa.string())
+                    )
+                out.append(pa.Table.from_arrays(arrays, schema=target))
+        return out
 
     def scan(self, where, version: int | None = None) -> DataFrame:
         """Predicate-pruned logical read: ``read().filter(where)`` with
@@ -772,7 +892,9 @@ class LakeTable:
         pred = F.expr(where) if isinstance(where, str) else where
         entries = self._entries(version)
         terms = (
-            normalize_terms(parse_terms(where), self.schema(version))
+            normalize_terms(
+                parse_terms(where), self.schema(version), self._session_tz()
+            )
             if isinstance(where, str)
             else []
         )
@@ -1931,16 +2053,6 @@ class LakeTable:
             )
 
         return self._retrying(retry_conflicts, attempt)
-
-    def overwrite_all(
-        self, df: DataFrame, batch_id: int | None = None, summary: dict | None = None
-    ) -> dict:
-        entries = self._write_data_files(self._prepare_df(df))
-        return self._commit("overwrite", entries, batch_id, summary, None)
-
-    def rows_in_buckets(self, buckets: Iterable[int]) -> int:
-        bs = set(buckets)
-        return sum(e["rows"] for e in self.manifest()["files"] if e["bucket"] in bs)
 
     # -- row-level DML ---------------------------------------------------------------
 

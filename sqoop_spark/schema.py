@@ -83,11 +83,6 @@ def apply_type_mapping(df: DataFrame, jdbc_schema: dict[str, str]) -> DataFrame:
     return df.select(*cols)
 
 
-def schema_fingerprint(schema: T.StructType) -> str:
-    """Stable fingerprint of a schema (name:type list), used by manifests."""
-    return ";".join(f"{f.name}:{f.dataType.simpleString()}" for f in schema.fields)
-
-
 #: Words a generated identifier may not collide with — the reference avoids
 #: Java reserved words (orm/ClassWriter.java identifier cleaning); here the
 #: hazard set is SQL keywords that break unquoted column references.

@@ -21,7 +21,7 @@ from __future__ import annotations
 import hashlib
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -53,17 +53,6 @@ def sha256_udf(col):
     if "sha256" not in _UDF_CACHE:
         _UDF_CACHE["sha256"] = pandas_udf(_sha256_impl, "string")
     return _UDF_CACHE["sha256"](col)
-
-
-def sha256_col(col: Column | str) -> Column:
-    """JVM-side sha256 (same result as sha256_udf, whole-stage-codegen'd).
-
-    The engine uses the pandas UDF on the ingest path (the north rule mandates
-    pandas/Arrow transforms); this expression form exists for plan fragments
-    that must stay inside codegen (e.g. oracle-parity queries).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
 
 
 def make_normalize_udf(

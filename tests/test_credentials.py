@@ -21,6 +21,8 @@ from sqoop_spark.credentials import (
     list_aliases,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_create_fetch_roundtrip(tmp_path):
     ks = str(tmp_path / "store.json")
@@ -182,13 +184,13 @@ def test_credential_cli_roundtrip(tmp_path):
         [sys.executable, "-m", "sqoop_spark.cli", "credential", "create",
          "db.password"],
         input="tops3cret\n", capture_output=True, text=True,
-        cwd="/root/repo", env=env,
+        cwd=REPO, env=env,
     )
     assert r.returncode == 0, r.stderr
     assert json.loads(r.stdout.strip().splitlines()[-1])["created"] == "db.password"
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "credential", "list"],
-        capture_output=True, text=True, cwd="/root/repo", env=env,
+        capture_output=True, text=True, cwd=REPO, env=env,
     )
     assert r.stdout.split() == ["db.password"]
     assert fetch_credential(ks, "db.password") == "tops3cret"

@@ -15,6 +15,8 @@ from pyspark.sql import types as T
 
 from sqoop_spark.lake import LakeTable
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _table(spark, scratch, name, buckets=4):
     schema = T.StructType(
@@ -115,7 +117,7 @@ def test_auto_maintain_cli(spark, scratch):
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "maintain",
          "--path", t.path, "--auto", "--expire-snapshots", "5"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     rep = json.loads(r.stdout.strip().splitlines()[-1])["auto"]
@@ -128,7 +130,7 @@ def test_describe_cli(spark, scratch):
     t.append(spark.createDataFrame([(1, 1, "a")], schema))
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "describe", "--path", t.path],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     rep = json.loads(r.stdout)

@@ -25,6 +25,8 @@ from sqoop_spark.lake.iceberg_export import (
     read_data_files,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCHEMA = T.StructType(
     [
         T.StructField("k", T.LongType()),
@@ -256,7 +258,7 @@ def test_export_cli(spark, scratch):
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "maintain",
          "--path", t.path, "--export-iceberg", "--export-symlink"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     out = json.loads(r.stdout.strip().splitlines()[-1])

@@ -21,6 +21,8 @@ from pyspark.sql import types as T
 from sqoop_spark.errors import EngineError
 from sqoop_spark.lake import LakeTable
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _table(spark, scratch, name, buckets=4):
     schema = T.StructType(
@@ -82,11 +84,11 @@ def test_lookup_prunes_files_within_bucket(spark, scratch):
         [(f"zzz{i}", i, "hi") for i in range(50)], schema
     ))
     assert len(t.manifest()["files"]) >= 2
-    df = t.lookup({"k": "aaa7"})
-    assert len(df.inputFiles()) < len(t.manifest()["files"]), (
+    opened = t.lookup_entries({"k": "aaa7"})
+    assert len(opened) < len(t.manifest()["files"]), (
         "key zone maps must skip the disjoint-range file"
     )
-    assert df.collect()[0].v == "lo"
+    assert t.lookup({"k": "aaa7"}).collect()[0].v == "lo"
 
 
 def test_lookup_fail_open_without_key_stats(spark, scratch):
@@ -146,9 +148,91 @@ def test_lookup_cli(spark, scratch):
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "lookup",
          "--path", t.path, "--key", "k=key2"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     rows = [json.loads(line) for line in r.stdout.strip().splitlines()
             if line.startswith("{")]
     assert rows[-1]["v"] == "v2" and rows[-1]["seq"] == 2
+
+
+def test_lookup_opens_exactly_its_entries(spark, scratch, monkeypatch):
+    # lookup reads on the driver, so its frame lists no input files; the
+    # file-skip contract is that it opens exactly lookup_entries — checked
+    # by recording every pyarrow open, across a plain bucket, a bucket
+    # with a live delta, and a compacted bucket with a retained tombstone
+    import pyarrow.parquet as pq
+
+    t, schema = _table(spark, scratch, "l9", buckets=1)
+    t.append(spark.createDataFrame(
+        [(f"aaa{i}", i, "lo") for i in range(50)], schema
+    ))
+    t.append(spark.createDataFrame(
+        [(f"zzz{i}", i, "hi") for i in range(50)], schema
+    ))
+    d = T.StructType(schema.fields + [T.StructField("op", T.StringType())])
+    opened = []
+    real = pq.ParquetFile
+
+    def recording(path, *a, **kw):
+        opened.append(path)
+        return real(path, *a, **kw)
+
+    def check(key, expect_rows):
+        entries = t.lookup_entries({"k": key})
+        opened.clear()
+        monkeypatch.setattr(pq, "ParquetFile", recording)
+        try:
+            rows = [(r.k, r.seq, r.v) for r in t.lookup({"k": key}).collect()]
+        finally:
+            monkeypatch.setattr(pq, "ParquetFile", real)
+        assert sorted(opened) == sorted(
+            os.path.join(t.path, e["path"]) for e in entries
+        )
+        assert rows == expect_rows
+        return entries
+
+    assert len(check("aaa7", [("aaa7", 7, "lo")])) == 1
+    t.append_delta(spark.createDataFrame(
+        [("aaa7", 100, "new", "upsert"), ("aaa8", 100, None, "delete")], d
+    ))
+    entries = check("aaa7", [("aaa7", 100, "new")])
+    assert any(e.get("delta") for e in entries)
+    check("aaa8", [])
+    check("zzz3", [("zzz3", 3, "hi")])
+    t.compact()
+    assert any(e.get("tombstone") for e in t.manifest()["files"])
+    assert not any(e.get("tombstone") for e in check("aaa9", [("aaa9", 9, "lo")]))
+    check("aaa8", [])
+    t.append_delta(spark.createDataFrame([("aaa8", 50, "late", "upsert")], d))
+    # an older event than the retained delete marker: the marker still wins
+    assert any(e.get("tombstone") for e in check("aaa8", []))
+
+
+@pytest.mark.parametrize(
+    "dtype,key", [(T.StringType(), "key3"), (T.LongType(), 3)],
+    ids=["string", "bigint"],
+)
+def test_lookup_collect_runs_no_spark_job(spark, scratch, dtype, key):
+    from tests.test_bucket_hash import _jobs_in_group
+
+    schema = T.StructType(
+        [
+            T.StructField("k", dtype),
+            T.StructField("seq", T.LongType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(scratch, "t"), schema, ["k"], num_buckets=4,
+        properties={"order_column": "seq"},
+    )
+    mk = (lambda i: f"key{i}") if isinstance(dtype, T.StringType) else int
+    t.append(spark.createDataFrame([(mk(i), i, f"v{i}") for i in range(8)], schema))
+    d = T.StructType(schema.fields + [T.StructField("op", T.StringType())])
+    t.append_delta(spark.createDataFrame([(key, 100, "new", "upsert")], d))
+    for i, (k, want) in enumerate([(key, ["new"]), (mk(5), ["v5"]), (mk(99), [])]):
+        rows, jobs = _jobs_in_group(
+            spark, f"lookup-collect-{i}", lambda: t.lookup({"k": k}).collect()
+        )
+        assert ([r.v for r in rows], jobs) == (want, 0)

@@ -19,6 +19,8 @@ from sqoop_spark.cdc.merge import merge_apply
 from sqoop_spark.lake import LakeTable
 from sqoop_spark.lake.pruning import entry_excluded, parse_terms, split_conjuncts
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCHEMA = T.StructType(
     [
         T.StructField("k", T.LongType()),
@@ -200,7 +202,7 @@ def test_scan_cli(spark, scratch):
         [sys.executable, "-m", "sqoop_spark.cli", "scan",
          "--path", t.path, "--where", "k >= 10 and k < 12",
          "--columns", "k,v"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     rows = [json.loads(line) for line in r.stdout.strip().splitlines()]
@@ -213,7 +215,7 @@ def test_scan_cli(spark, scratch):
         [sys.executable, "-m", "sqoop_spark.cli", "scan",
          "--path", t.path, "--where", "k >= 10 and k < 12",
          "--limit", "0"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r0.returncode == 0, r0.stderr
     assert r0.stdout.strip() == ""
@@ -229,19 +231,33 @@ def test_normalize_terms_temporal_literals():
     schema = T.StructType(
         [
             T.StructField("ts", T.TimestampType()),
+            T.StructField("ntz", T.TimestampNTZType()),
             T.StructField("d", T.DateType()),
             T.StructField("v", T.StringType()),
             T.StructField("k", T.LongType()),
         ]
     )
-    # space-separator form re-spelled to the stored isoformat ('T') form
+    # space-separator form re-spelled to the stored isoformat ('T') form;
+    # TIMESTAMP bounds are UTC instants carrying '+00:00', NTZ ones naive
     assert normalize_terms([("ts", "<=", ["2024-06-15 23:00:00"])], schema) == [
-        ("ts", "<=", ["2024-06-15T23:00:00"])
+        ("ts", "<=", ["2024-06-15T23:00:00+00:00"])
+    ]
+    assert normalize_terms([("ntz", "<=", ["2024-06-15 23:00:00"])], schema) == [
+        ("ntz", "<=", ["2024-06-15T23:00:00"])
     ]
     # date-only literal probing a timestamp gets midnight, like Spark's cast
     assert normalize_terms([("ts", ">", ["2024-06-15"])], schema) == [
-        ("ts", ">", ["2024-06-15T00:00:00"])
+        ("ts", ">", ["2024-06-15T00:00:00+00:00"])
     ]
+    # a TIMESTAMP literal is read in the session zone, as Spark casts it;
+    # a wall-clock time the zone skips (DST gap) or an unknown zone: DROPPED
+    assert normalize_terms(
+        [("ts", "=", ["2024-06-15 02:00:00"])], schema, "Europe/Berlin"
+    ) == [("ts", "=", ["2024-06-15T00:00:00+00:00"])]
+    assert normalize_terms(
+        [("ts", "=", ["2024-03-31 02:30:00"])], schema, "Europe/Berlin"
+    ) == []
+    assert normalize_terms([("ts", "=", ["2024-06-15"])], schema, "No/Such") == []
     # timestamp-shaped literal probing a DATE truncates to the date
     assert normalize_terms([("d", "=", ["2024-06-15 23:00:00"])], schema) == [
         ("d", "=", ["2024-06-15"])
@@ -292,6 +308,9 @@ def test_scan_timestamp_string_literal_sound(spark, scratch):
         "ts >= '2024-06-03 00:00:00' and ts < '2024-06-04 12:00:00'",
         "ts = '2024-06-01 05:00:00'",
         "ts > '2024-06-08'",
+        # equal to a file's min bound: the literal must not sort below it
+        "ts = '2024-06-01 00:00:00'",
+        "ts <= '2024-06-01'",
     ]:
         got = sorted(r.k for r in t.scan(where).collect())
         want = sorted(r.k for r in t.read().filter(where).collect())
@@ -308,3 +327,6 @@ def test_scan_timestamp_string_literal_sound(spark, scratch):
     )
     assert sorted(r.k for r in since.collect()) == want and want
     assert len(since.inputFiles()) < total
+    # a datetime watermark equal to a file's min bound keeps that file
+    upto = t.read_since("ts", None, upper=base)
+    assert sorted(r.k for r in upto.collect()) == [0]

@@ -23,6 +23,8 @@ from pyspark.sql import types as T
 from sqoop_spark.errors import ConcurrentCommitError, EngineError
 from sqoop_spark.lake import LakeTable
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _seq_table(spark, scratch, name, buckets=4):
     schema = T.StructType(
@@ -274,7 +276,7 @@ def test_wap_cli_roundtrip(spark, scratch, tmp_path):
     def run(*argv):
         return subprocess.run(
             [sys.executable, "-m", "sqoop_spark.cli", *argv],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=REPO,
         )
 
     r = run("wap", "stage", "--path", t.path, "--wap-id", "cli-1",
@@ -302,13 +304,13 @@ def test_wap_cli_audit_failure_exit_code(spark, scratch, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "wap", "stage",
          "--path", t.path, "--wap-id", "bad", "--source", src],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 0, r.stderr
     r = subprocess.run(
         [sys.executable, "-m", "sqoop_spark.cli", "wap", "audit",
          "--path", t.path, "--wap-id", "bad", "--not-null", "v"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
     )
     assert r.returncode == 1, "failed audit must exit non-zero"
     rep = json.loads(r.stdout.strip().splitlines()[-1])
