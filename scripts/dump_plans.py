@@ -282,17 +282,24 @@ def main() -> None:
         {e["bucket"] for e in entries if e.get("delta") and not e.get("tombstone")}
     )
     n_base = len([e for e in entries if not e.get("delta")])
+    in_delta = [e for e in entries if e["bucket"] in d_buckets]
+    above = [e for e in in_delta if e["stats"]["seq"][1] > 299]
     since2 = lt.read_since("seq", 299)
     sections.append(
         (
             "Bucket-granular incremental read under MoR deltas (read_since)",
             f"One unmerged delta lands in bucket(s) {d_buckets}: ONLY those "
-            "buckets are key-resolved (base∪delta newest-wins); the "
-            f"remaining buckets of the {n_base} base files keep the "
-            "zone-map file skip — the plan is a union of the resolved "
-            "delta bucket(s) and the pruned base scan, O(delta buckets) "
-            "instead of the pre-round-4 full-table resolve+filter. "
-            "tests/test_lake.py pins the opened-file set.",
+            "buckets are key-resolved (base∪delta newest-wins). Because "
+            "seq is the order column newest-wins ranks by, the watermark "
+            "seq > 299 sits BELOW the Window — it reaches the delta "
+            "bucket's parquet scans as PushedFilters — and zone maps prune "
+            f"that bucket to its {len(above)} of {len(in_delta)} files "
+            "whose seq max is above it. The remaining buckets of the "
+            f"{n_base} base files keep the zone-map file skip; the plan is "
+            "a union of the pruned base scan and the filtered, resolved "
+            "delta bucket(s), O(files above the watermark) instead of a "
+            "whole-bucket resolve. tests/test_lake.py pins the opened-file "
+            "set, tests/test_plans_validation.py the pushed filter.",
             formatted(since2),
         )
     )

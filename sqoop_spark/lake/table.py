@@ -400,7 +400,12 @@ class LakeTable:
                 empty_schema.fields + [T.StructField("_op", T.StringType())]
             )
         if not entries:
-            return self.spark.createDataFrame([], empty_schema)
+            # an Arrow-built empty frame is a local relation the optimizer
+            # drops from a union; ``createDataFrame([], schema)`` is an
+            # RDD scan it cannot drop, which every action then runs
+            return self.spark.createDataFrame(
+                to_arrow_schema(empty_schema).empty_table(), schema=empty_schema
+            )
         groups: dict[str, list[dict]] = {}
         for e in entries:
             sig = json.dumps(
@@ -625,41 +630,51 @@ class LakeTable:
         merge tables every file spans the whole order range, so zone maps
         cannot prune there.)
 
-        Unmerged MoR deltas are handled at BUCKET granularity: a delta
-        file can rewrite or delete keys anywhere in its bucket, so that
-        bucket must be key-resolved whole before the watermark filter —
-        but ONLY that bucket. Delta-free buckets keep the zone-map file
-        skip. A lagging compactor therefore costs O(delta buckets), not
-        O(table): the incremental consumer never degrades to a full
-        resolve just because one bucket has a pending delta. Retained
-        tombstone files (compact's delete markers) don't count as
-        unmerged deltas — their buckets' base files are already
-        delete-applied (see ``_resolve_buckets``), so the steady-state
-        compacted MoR table keeps full zone-map pruning."""
+        Unmerged MoR deltas are handled at BUCKET granularity. When
+        ``column`` is the table's order column (the one newest-wins ranks
+        by), the lower bound is applied to the raw base and delta rows
+        BEFORE the resolve, and the files of delta buckets are zone-map
+        pruned by it too: a key whose newest row is above the watermark
+        has that row win among the rows above it as well, and a key whose
+        newest row is not above it has no row above it at all (ties keep
+        both rows and go to ``_op`` descending; NULL orders sort last and
+        never pass). The upper bound
+        still applies after the resolve — a row above it may supersede an
+        older one below it — and prunes files only in delta-free buckets.
+        For any other column a delta file can rewrite or delete keys
+        anywhere in its bucket, so that bucket is key-resolved whole
+        before the filter — but ONLY that bucket. Delta-free buckets keep
+        the zone-map file skip in both cases, so a lagging compactor costs
+        O(delta buckets), not O(table). Retained tombstone files
+        (compact's delete markers) don't count as unmerged deltas — their
+        buckets' base files are already delete-applied (see
+        ``_resolve_buckets``, applied here to the pruned files), so the
+        steady-state compacted MoR table keeps full zone-map pruning."""
         from sqoop_spark.cdc.watermark import typed_lit
 
         if column not in self.schema(version).fieldNames():
             raise EngineError(f"read_since: no column {column!r} in table schema")
         dtype = self.schema(version)[column].dataType
-        pred = F.lit(True)
+        lower = F.lit(True)
         if last_value is not None:
-            pred = F.col(column) > typed_lit(last_value, dtype)
+            lower = F.col(column) > typed_lit(last_value, dtype)
+        pred = lower
         if upper is not None:
-            pred = pred & (F.col(column) <= typed_lit(upper, dtype))
+            pred = lower & (F.col(column) <= typed_lit(upper, dtype))
         entries = self._entries(version)
-        delta_buckets = self._resolve_buckets(entries)
-        clean = [
-            e
-            for e in entries
-            if e["bucket"] not in delta_buckets and not e.get("tombstone")
-        ]
-        pruned = self.prune_entries(clean, column, lower=last_value, upper=upper)
-        out = self._read_files(pruned, version).filter(pred)
-        if delta_buckets:
-            out = out.unionByName(
-                self._read_state(version, delta_buckets).filter(pred)
-            )
-        return out
+        pushed = column == self.order_column
+        if pushed:
+            entries = self.prune_entries(entries, column, lower=last_value)
+        rb = self._resolve_buckets(entries)
+        entries = [e for e in entries if e["bucket"] in rb] + self.prune_entries(
+            [e for e in entries if e["bucket"] not in rb],
+            column,
+            lower=last_value,
+            upper=upper,
+        )
+        return self._state_of_entries(
+            entries, version, lower if pushed else None
+        ).filter(pred)
 
     def bucket_of(self, key: dict, version: int | None = None) -> int:
         """The bucket a full key tuple hashes to under the writer's
@@ -986,12 +1001,18 @@ class LakeTable:
         return self._state_of_entries(self._entries(version, buckets=buckets), version)
 
     def _state_of_entries(
-        self, entries: list[dict], version: int | None = None
+        self,
+        entries: list[dict],
+        version: int | None = None,
+        pre: F.Column | None = None,
     ) -> DataFrame:
         """Logical state of an explicit file-entry list (the body of
         :meth:`_read_state`, also used by :meth:`read_staged` to read a
         snapshot that is not committed yet: current entries + staged
-        entries)."""
+        entries). ``pre`` filters the raw rows of the resolved buckets
+        before newest-wins; only a lower bound on the order column may be
+        pushed there (:meth:`read_since`), and the caller filters the
+        result with it again."""
         rb = self._resolve_buckets(entries)
         plain = [
             e
@@ -1001,7 +1022,8 @@ class LakeTable:
         if not rb:
             return self._read_files(plain, version)
         need = [e for e in entries if e["bucket"] in rb]
-        resolved = self._resolve(self._read_files(need, version, with_op=True))
+        raw = self._read_files(need, version, with_op=True)
+        resolved = self._resolve(raw if pre is None else raw.filter(pre))
         if not plain:
             return resolved
         return self._read_files(plain, version).unionByName(resolved)

@@ -266,9 +266,11 @@ def test_read_since_mor_fallback(spark, scratch):
 
 def test_read_since_mor_bucket_granular(spark, scratch):
     """An unmerged delta in ONE bucket must not degrade the incremental
-    read to a full-table resolve: only the delta bucket's files open in
-    full; delta-free buckets keep the zone-map file skip. (The lagging-
-    compactor scale edge: O(delta buckets), not O(table).)"""
+    read to a full-table resolve: the delta bucket opens only its files
+    above the watermark (the lower bound on the order column is applied
+    below newest-wins), and delta-free buckets keep the zone-map file
+    skip. (The lagging-compactor scale edge: O(delta buckets), not
+    O(table).)"""
     schema = T.StructType(
         [
             T.StructField("k", T.LongType()),
@@ -301,7 +303,9 @@ def test_read_since_mor_bucket_granular(spark, scratch):
     t.append_delta(delta)
 
     entries = t.manifest()["files"]
-    bucket0 = [e for e in entries if e["bucket"] == 0]
+    above0 = [e for e in entries if e["bucket"] == 0 and e["stats"]["seq"][1] > 19]
+    assert any(e.get("delta") for e in above0)
+    assert len(above0) < sum(e["bucket"] == 0 for e in entries)
     clean1 = [e for e in entries if e["bucket"] == 1]
     pruned1 = t.prune_entries(clean1, "seq", lower=19)
     assert len(pruned1) < len(clean1), "clean bucket must still zone-map-prune"
@@ -312,12 +316,12 @@ def test_read_since_mor_bucket_granular(spark, scratch):
     def tail(p):  # "<commit-uuid>/_bucket=K/part-...": unique per file
         return "/".join(p.replace("\\", "/").split("/")[-3:])
 
-    # exactly: all of the delta bucket (resolve needs every file) plus the
-    # zone-map-surviving files of the clean bucket — strictly fewer than all
-    assert len(opened) == len(bucket0) + len(pruned1)
+    # exactly: the delta bucket's files whose seq max is above the
+    # watermark plus the zone-map-surviving files of the clean bucket
+    assert len(opened) == len(above0) + len(pruned1)
     assert len(opened) < len(entries)
     opened_names = {tail(p) for p in opened}
-    assert opened_names == {tail(e["path"]) for e in bucket0} | {
+    assert opened_names == {tail(e["path"]) for e in above0} | {
         tail(e["path"]) for e in pruned1
     }
 

@@ -11,12 +11,14 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sqoop_spark.cdc import CdcEngine
 from sqoop_spark.cdc.merge import MergeMode, merge_frames, newest_wins_reduce
 from sqoop_spark.cdc.watermark import IncrementalMode, incremental_slice
 from sqoop_spark.datagen import synthesize_change_events
 from sqoop_spark.errors import ValidationFailure
+from sqoop_spark.lake import LakeTable
 from sqoop_spark.schema import clean_identifier, clean_identifiers
 from sqoop_spark.validation import (
     AbsoluteValidationThreshold,
@@ -94,6 +96,83 @@ def test_newest_wins_partial_window_group_limit(spark, staged):
     assert "Partial" in plan.split("Exchange hashpartitioning")[-1] or (
         plan.count("WindowGroupLimit") >= 2
     ), plan
+
+
+def _mor_seq_table(spark, path):
+    """A 2-bucket MoR table whose every bucket holds three unmerged delta
+    commits with disjoint ``seq`` ranges (0-9, 10-19, 20-29)."""
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("seq", T.LongType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    t = LakeTable.create(
+        spark, path, schema, ["k"], num_buckets=2,
+        properties={"order_column": "seq"},
+    )
+    ops = T.StructType(schema.fields + [T.StructField("op", T.StringType())])
+    for lo in (0, 10, 20):
+        t.append_delta(spark.createDataFrame(
+            [(lo + i, lo + i, f"v{i % 3}", "upsert") for i in range(10)], ops
+        ))
+    assert set(t.delta_file_counts()) == {0, 1}
+    return t
+
+
+def test_read_since_watermark_below_window_in_delta_buckets(spark, scratch):
+    """With deltas pending, the watermark on the order column reaches the
+    delta-bucket parquet scans (below the newest-wins Window), and only
+    files above it are listed."""
+    t = _mor_seq_table(spark, os.path.join(scratch, "t"))
+    df = t.read_since("seq", 19)
+    explained = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    scans = [
+        s for s in explained.split("\n\n")
+        if s.strip().startswith("(") and "Scan parquet" in s
+    ]
+    assert scans and all("GreaterThan(seq,19)" in s for s in scans), explained
+    tree = _plan(df)
+    assert "Window" in tree and tree.index("Window") < tree.index("> 19)"), tree
+    above = [e for e in t.manifest()["files"] if e["stats"]["seq"][1] > 19]
+    assert len(df.inputFiles()) == len(above) == 2
+
+
+def test_empty_read_parts_are_not_rdd_scans(spark, scratch):
+    """An empty part of a logical read is a local relation the optimizer
+    drops, never a ``Scan ExistingRDD`` that every action runs."""
+    t = _mor_seq_table(spark, os.path.join(scratch, "t"))
+    for df in (
+        t.read_since("seq", 19),
+        t.read_since("v", "v1"),
+        t.scan("v = 'v1'"),
+    ):
+        assert "ExistingRDD" not in _plan(df), _plan(df)
+
+
+def test_read_files_empty_has_snapshot_schema(spark, scratch):
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("amount", T.DecimalType(12, 2)),
+            T.StructField("seq", T.LongType()),
+        ]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(scratch, "t"), schema, ["k"], num_buckets=2,
+        properties={"order_column": "seq"},
+    )
+    plain = t._read_files([])
+    assert plain.schema == t.schema() and plain.count() == 0
+    with_op = t._read_files([], with_op=True)
+    assert with_op.schema == T.StructType(
+        t.schema().fields + [T.StructField("_op", T.StringType())]
+    )
+    assert with_op.count() == 0
 
 
 def test_merge_frames_join_strategies(spark, staged):
