@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from sqoop_spark.errors import EngineError
 from sqoop_spark.lake import LakeTable
-from sqoop_spark.lake.table import _json_stat
+from sqoop_spark.lake.pruning import canon_bound, entry_excluded
 
 _log = logging.getLogger(__name__)
 
@@ -394,24 +394,27 @@ def _merge_apply_mor(
 
 
 def _split_zone_carry(
-    entries: list[dict], batch_ranges: dict, key_cols: list[str]
+    entries: list[dict], batch_ranges: dict[int, list]
 ) -> tuple[list[dict], list[dict]]:
     """Partition the affected buckets' base file entries into ``(touched,
     carry)``: an entry is carried — kept in the CoW commit BY REFERENCE,
-    never read or rewritten — when its per-file key zone maps prove no
-    batch key can equal any row key in it (some key column's ``[min, max]``
-    is disjoint from the batch's ``[min, max]`` for that bucket; equality
-    needs every column to land inside the file's bounds, so one disjoint
-    column is proof). Write amplification of a CoW merge drops from
-    O(bucket) to O(files the batch keys can actually touch) — Iceberg's
-    "overwrite only overlapping data files", material on clustered tables
+    never read or rewritten — when :func:`entry_excluded` (the one
+    zone-map rule, lake/pruning.py) proves no batch key can equal any row
+    key in it. ``batch_ranges`` holds, per bucket, the terms ``(k, ">=",
+    [batch min])`` and ``(k, "<=", [batch max])`` of every key column,
+    spelled in the bounds' encoding; equality needs every column inside
+    the file's bounds, so one excluding term is proof. Write
+    amplification of a CoW merge drops from O(bucket) to O(files the
+    batch keys can actually touch) — Iceberg's "overwrite only
+    overlapping data files", material on clustered tables
     (``rewrite_clustered``) where each file covers a narrow key range.
 
-    Fail-closed to touched wherever a bound is missing (pre-stats files,
-    types with no order-preserving JSON form). Buckets holding delta or
-    tombstone files are fully touched: delta resolution is bucket-granular
-    and must fold into the rewrite, and the full-bucket CoW contract drops
-    spent tombstones — carrying base files around them would change that.
+    Fail-closed to touched wherever a bound is missing or cannot be
+    compared (pre-stats files, types with no order-preserving JSON
+    form). Buckets holding delta or tombstone files are fully touched:
+    delta resolution is bucket-granular and must fold into the rewrite,
+    and the full-bucket CoW contract drops spent tombstones — carrying
+    base files around them would change that.
     """
     full_rewrite = {
         e["bucket"] for e in entries if e.get("delta") or e.get("tombstone")
@@ -419,23 +422,9 @@ def _split_zone_carry(
     touched: list[dict] = []
     carry: list[dict] = []
     for e in entries:
-        if e["bucket"] in full_rewrite:
-            touched.append(e)
-            continue
-        rng = batch_ranges.get(e["bucket"])
-        st = e.get("stats") or {}
-        skip = False
-        if rng:
-            for k in key_cols:
-                s = st.get(k)
-                if not s:
-                    continue
-                mn, mx = rng.get(k, (None, None))
-                if mn is None or mx is None:
-                    continue
-                if s[1] < mn or s[0] > mx:
-                    skip = True
-                    break
+        skip = e["bucket"] not in full_rewrite and entry_excluded(
+            e.get("stats"), batch_ranges.get(e["bucket"], [])
+        )
         (carry if skip else touched).append(e)
     return touched, carry
 
@@ -448,7 +437,6 @@ def merge_apply(
     op_col: str = "op",
     order_col: str = "event_seq",
     reduce_batch: bool = True,
-    broadcast_batch: bool | None = None,
     salt_partitions: int = 0,
     extra_summary: dict | None = None,
     post_reduce_transform=None,
@@ -456,7 +444,6 @@ def merge_apply(
     auto_compact_threshold: int = 16,
     obs_timeout: float = 10.0,
     commit_retry_disjoint: int = 0,
-    file_granular: bool = True,
 ) -> MergeStats:
     """Apply one change batch to the lake table.
 
@@ -467,11 +454,11 @@ def merge_apply(
 
     Strategies:
     - ``cow`` (copy-on-write): full-outer join against the touched buckets,
-      rewrite them. Exact per-batch counters; write volume O(bucket data) —
-      less with ``file_granular`` (default): within each affected bucket,
-      base files whose key zone maps are disjoint from the batch's key
-      range (recorded by the same probe job) are carried by reference
-      instead of read+rewritten, so write volume is O(overlapping files).
+      rewrite them. Exact per-batch counters. Within each affected
+      bucket, base files whose key zone maps are disjoint from the
+      batch's key range (recorded by the same probe job) are carried by
+      reference instead of read+rewritten, so write volume is
+      O(overlapping files), not O(bucket data).
     - ``mor`` (merge-on-read): append newest-wins delta files; resolution
       happens at read time / compaction (LakeTable._resolve). Write volume
       O(batch) — the 10^10-event scale path (a CoW rewrite per batch is
@@ -518,16 +505,17 @@ def merge_apply(
     # keys — the newest-wins reduce cannot change the key set, so probing
     # before the window/UDF chain reads just the key columns (parquet
     # column pruning) instead of materializing the transformed batch. Tiny
-    # result (≤ num_buckets rows); this is the pruning key. With
-    # ``file_granular`` the SAME probe job also records per-bucket
-    # [min, max] of every key column — the batch-side half of the
-    # file-granular zone-map carry (``_split_zone_carry``); no extra job,
-    # the min/max partials ride the groupBy's map-side combine. MoR reads
-    # no old side, so it runs no probe: its ``buckets_touched`` counts the
-    # buckets of the delta files it commits.
+    # result (≤ num_buckets rows); this is the pruning key. The SAME probe
+    # job also records per-bucket [min, max] of every key column — the
+    # batch-side half of the file-granular zone-map carry
+    # (``_split_zone_carry``); no extra job, the min/max partials ride the
+    # groupBy's map-side combine. It is collected as Arrow, so a timestamp
+    # bound is an instant, spelled like the footer bounds whatever the
+    # session time zone. MoR reads no old side, so it runs no probe: its
+    # ``buckets_touched`` counts the buckets of the delta files it commits.
     affected: list[int] = []
-    batch_ranges: dict = {}
-    if strategy == "cow" and file_granular:
+    batch_ranges: dict[int, list] = {}
+    if strategy != "mor":
         aggs = []
         for k in key_cols:
             aggs.append(F.min(F.col(k)).alias(f"_mn_{k}"))
@@ -536,21 +524,16 @@ def merge_apply(
             batch.select(table.bucket_expr().alias("_b"), *key_cols)
             .groupBy("_b")
             .agg(*aggs)
-            .collect()
+            .toArrow()
         )
-        affected = sorted(r["_b"] for r in probe)
-        batch_ranges = {
-            r["_b"]: {
-                k: (_json_stat(r[f"_mn_{k}"]), _json_stat(r[f"_mx_{k}"]))
+        types = {f.name: f.dataType for f in table.schema().fields}
+        for i, b in enumerate(probe.column("_b").to_pylist()):
+            batch_ranges[b] = [
+                (k, op, [canon_bound(probe.column(f"{c}{k}")[i], types[k])])
                 for k in key_cols
-            }
-            for r in probe
-        }
-    elif strategy != "mor":
-        affected = sorted(
-            r["_b"]
-            for r in batch.select(table.bucket_expr().alias("_b")).distinct().collect()
-        )
+                for op, c in ((">=", "_mn_"), ("<=", "_mx_"))
+            ]
+        affected = sorted(batch_ranges)
 
     obs_in = Observation(f"merge-in-{batch_id}")
     batch = batch.observe(obs_in, F.count(F.lit(1)).alias("events_in"))
@@ -628,9 +611,7 @@ def merge_apply(
     # into touched (read + rewritten) and carry (key zone maps prove no
     # batch key lands in them — committed by reference, zero IO).
     base_entries = table._entries(base_version, buckets=set(affected))
-    touched_entries, carry_entries = _split_zone_carry(
-        base_entries, batch_ranges, key_cols
-    )
+    touched_entries, carry_entries = _split_zone_carry(base_entries, batch_ranges)
     old = (
         table._state_of_entries(touched_entries, base_version)
         .observe(obs_old, F.count(F.lit(1)).alias("old_rows"))
@@ -648,10 +629,7 @@ def merge_apply(
     )
     # Join strategy: with AQE on (session default) Spark converts SMJ →
     # broadcast at runtime from the *actual* reduced-batch size, which is the
-    # right call at every scale; ``broadcast_batch=True`` forces the hint for
-    # callers that know the batch is tiny.
-    if broadcast_batch:
-        new_side = F.broadcast(new_side)
+    # right call at every scale.
 
     # Plain equality, not eqNullSafe: null keys were already rejected by
     # newest_wins_reduce's guard, and null-safe joins key the shuffle on

@@ -1,30 +1,42 @@
-"""Manifest-level predicate pruning for :meth:`LakeTable.scan`.
+"""The one file-skip rule of the lake table: which manifest file entries
+a read may leave unopened.
 
-Extracts *prunable terms* from a SQL ``WHERE`` string — simple
-``column OP literal`` comparisons joined by top-level ``AND`` — and
-evaluates each file entry's recorded zone maps against them, so a
-filtered read skips whole files before Spark lists a single path. This
-is the Iceberg manifest-bounds prune: Sqoop has no analog (its WHERE
-clauses push to the source database, ``tool/ImportTool.java``); here the
-lake table IS the source, so the manifest plays the role of the
-database's index.
+Every read selects its files through :func:`select_files` — ``scan``
+(terms parsed from a SQL ``WHERE``), ``read_since`` (the watermark
+window, the append-incremental contract ``check_col > last_value AND
+check_col <= MAX`` of the reference, ``tool/ImportTool.java:316-333``)
+and ``lookup``/``lookup_entries`` (one ``=`` term per key column, in
+the key's one bucket) — and the copy-on-write merge carries a base file
+by reference when :func:`entry_excluded` proves the batch's key range
+misses it (``cdc/merge.py`` ``_split_zone_carry``). So a file's recorded
+zone map is compared in exactly one place (:func:`entry_excluded`),
+against values spelled by exactly one canonicalizer
+(:func:`canon_bound`). This is the Iceberg manifest-bounds prune: Sqoop
+has no analog (its WHERE clauses push to the source database); here
+the lake table IS the source, so the manifest plays the database index.
 
 Everything is **fail-open**: a term the parser cannot prove is a plain
 conjunctive comparison contributes no pruning; a top-level ``OR`` (or
-``NOT``) disables pruning entirely; a type mismatch between the literal
-and the recorded bound skips that term; a file with no stat for the
-column is always kept. The predicate is ALWAYS re-applied in-plan, so
-pruning can only ever skip files that provably hold no matching row —
-never change results.
+``NOT``) disables pruning entirely; a value that cannot be spelled as
+the bound encoding, or whose type or spelling differs from the recorded
+bound, skips that term; a file with no stat for the column is always
+kept. The predicate is ALWAYS re-applied in-plan, so pruning can only
+skip files that provably hold no matching row — never change results.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import os
 import re
+from zoneinfo import ZoneInfo
+
+import pyarrow as pa
+from pyspark.sql import types as T
 
 # A prunable term: (column, op, values) where op is one of
 # '=' '<' '<=' '>' '>=' 'in' and values is a 1+-element list of Python
-# literals (str / int / float).
+# literals (str / int / float; a None value prunes nothing).
 Term = tuple[str, str, list]
 
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][A-Za-z0-9_]*)"
@@ -139,137 +151,101 @@ def parse_terms(where: str) -> list[Term]:
     return [t for t in terms if all(v is not None for v in t[2])]
 
 
-def canon_timestamp_literal(v, tz: str | None = None) -> str | None:
-    """A string literal probing a TIMESTAMP column, canonicalized to the
-    manifest's stored bound encoding (``datetime.isoformat()``, ``T``
-    separator), or None — *fail open* — when it cannot be proven
-    order-equivalent: non-string literals, unparseable forms, and
-    timezone-aware literals.
+_TEMPORAL = (T.TimestampType, T.TimestampNTZType, T.DateType)
 
-    ``tz`` is the session time zone for a ``TimestampType`` column, None
-    for ``TimestampNTZType``. Footer bounds of a ``TimestampType`` column
-    are UTC instants and carry their offset ('...T00:00:00+00:00'), so
-    the literal is read in ``tz`` as Spark's cast reads it and spelled
-    as the same UTC instant; a naive spelling would sort BEFORE an equal
-    bound (it is a prefix of it) and wrongly skip the file whose min it
-    equals. A wall-clock time that ``tz`` skips or repeats (a DST gap or
-    overlap), or a zone Python cannot resolve, fails open. NTZ bounds
-    are naive and the literal stays naive."""
-    import datetime as dt
-    from zoneinfo import ZoneInfo
 
-    if not isinstance(v, str):
+def json_stat(v):
+    """A zone-map bound in its JSON-comparable form, or None if the type
+    has no order-preserving JSON encoding (then no stat is recorded and
+    pruning fails open). ISO-8601 keeps temporal ordering under string
+    comparison; an instant is spelled in UTC ('+00:00', as pyarrow
+    decodes a TIMESTAMP footer bound); bools/bytes/decimals are
+    skipped."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, (int, float, str)):
+        return v
+    if isinstance(v, dt.datetime) and v.utcoffset() is not None:
+        return v.astimezone(dt.timezone.utc).isoformat()
+    if isinstance(v, (dt.datetime, dt.date)):
+        return v.isoformat()
+    return None
+
+
+def canon_bound(value, dtype, tz: str = "UTC"):
+    """The one canonicalizer: ``value`` spelled in the manifest's bound
+    encoding for a column of Spark type ``dtype``, or None — *fail open*
+    — when it cannot be proven order-equivalent to the bounds.
+
+    - A typed value, an Arrow scalar of the column's type (``lookup``'s
+      cast key, the CoW probe's batch key range), is :func:`json_stat`
+      of its Python value: a TIMESTAMP instant in UTC, an NTZ naive.
+    - A user literal on a temporal column is read as Spark's cast reads
+      it. A string, a ``date`` or a naive ``datetime`` (``typed_lit``
+      hands Spark its ISO string) on a ``TimestampType`` column names a
+      wall-clock time in session time zone ``tz`` and is spelled as that
+      UTC instant, since a naive spelling sorts BEFORE the equal bound
+      (it is a prefix of it). A wall-clock time ``tz`` skips or repeats
+      (a DST gap or overlap), or a zone Python cannot resolve, fails
+      open. An NTZ literal stays naive; a DATE literal truncates to its
+      date. An aware ``datetime`` is an instant (TIMESTAMP only); an
+      aware string, an unparseable one or a number fails open.
+    - Any other literal is :func:`json_stat` of it (strings and numbers
+      unchanged); a string on a numeric column or a number on a string
+      column is left for :func:`entry_excluded` to skip as a type
+      mismatch."""
+    if isinstance(value, pa.Scalar):
+        return json_stat(value.as_py())
+    if not isinstance(dtype, _TEMPORAL):
+        return None if isinstance(value, dt.date) else json_stat(value)
+    if isinstance(value, dt.datetime) and value.utcoffset() is not None:
+        return json_stat(value) if isinstance(dtype, T.TimestampType) else None
+    if isinstance(value, dt.date):
+        value = value.isoformat()
+    if not isinstance(value, str):
         return None
     try:
-        parsed = dt.datetime.fromisoformat(v)
+        parsed = dt.datetime.fromisoformat(value)
     except ValueError:
         return None
     if parsed.utcoffset() is not None:
         return None
-    if tz is None:
+    if isinstance(dtype, T.DateType):
+        return parsed.date().isoformat()
+    if isinstance(dtype, T.TimestampNTZType):
         return parsed.isoformat()
     try:
-        zone = ZoneInfo(tz)
+        local = parsed.replace(tzinfo=ZoneInfo(tz))
     except (ValueError, LookupError):
         return None
-    local = parsed.replace(tzinfo=zone)
     if local.utcoffset() != local.replace(fold=1).utcoffset():
         return None
-    return local.astimezone(dt.timezone.utc).isoformat()
-
-
-def canon_date_literal(v) -> str | None:
-    """A string literal probing a DATE column, canonicalized to the
-    stored ``date.isoformat()`` form (Spark casts the literal to date,
-    truncating any time part), or None to fail open."""
-    import datetime as dt
-
-    if not isinstance(v, str):
-        return None
-    try:
-        parsed = dt.datetime.fromisoformat(v)
-    except ValueError:
-        return None
-    if parsed.utcoffset() is not None:
-        return None
-    return parsed.date().isoformat()
-
-
-_MISSING = object()
-
-
-def canon_literal(value, dtype, tz: str = "UTC"):
-    """One literal canonicalized against a column's Spark type for
-    comparison with the manifest's stored bound encoding — the single
-    dispatch rule shared by scan (normalize_terms) and
-    prune_entries/read_since (lookup compares the key already cast to
-    the column's type). ``tz`` is the session time zone a string literal
-    on a ``TimestampType`` column is read in:
-
-    - string probing Timestamp → :func:`canon_timestamp_literal` in ``tz``
-    - string probing TimestampNTZ → :func:`canon_timestamp_literal`, naive
-    - string probing Date → :func:`canon_date_literal`
-    - a ``datetime`` probing a temporal column → its isoformat string,
-      as above (``typed_lit`` hands Spark the same string to cast)
-    - anything else → unchanged (``_MISSING`` sentinel distinguishes
-      "not a temporal-string case" from "canonicalization failed")
-
-    Returns the canonical value, or None when the literal should
-    contribute no pruning (fail open), or ``_MISSING`` when the rule
-    does not apply and the caller's default encoding should be used."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    temporal = (T.TimestampType, T.TimestampNTZType, T.DateType)
-    if isinstance(value, dt.datetime) and isinstance(dtype, temporal):
-        value = value.isoformat()
-    if isinstance(value, str):
-        if isinstance(dtype, T.TimestampType):
-            return canon_timestamp_literal(value, tz)
-        if isinstance(dtype, T.TimestampNTZType):
-            return canon_timestamp_literal(value)
-        if isinstance(dtype, T.DateType):
-            return canon_date_literal(value)
-    return _MISSING
+    return json_stat(local)
 
 
 def normalize_terms(
     terms: list[Term], schema, tz: str = "UTC"
 ) -> list[Term]:
-    """Type-aware literal canonicalization against the table's Spark
-    schema — the fix for comparing SQL string literals to zone-map bounds
-    whose on-manifest encoding differs from the literal's spelling.
-    Timestamp/date column bounds are stored as ``isoformat()`` strings
-    ('T' separator), so a probe like ``ts <= '2024-06-15 23:00:00'``
-    (which Spark happily casts and matches) would raw-string-compare
-    wrongly (' ' sorts before 'T'). Each such literal is re-spelled in
-    the stored form — for a ``TimestampType`` column, the UTC instant it
-    names in session time zone ``tz``, with the bounds' '+00:00'; a term whose literal cannot be canonicalized (or a
-    numeric literal probing a temporal column) is DROPPED — fail open,
-    the predicate is always re-applied in-plan. Terms probing columns
-    absent from the schema pass through untouched (no stat will exist
-    for them anyway)."""
-    from pyspark.sql import types as T
-
+    """Parsed terms with every literal spelled by :func:`canon_bound` for
+    its column's type in ``schema`` (``tz`` is the session time zone). A
+    term with a literal that fails open is DROPPED — the predicate is
+    always re-applied in-plan. Terms probing columns absent from the
+    schema pass through untouched (no stat will exist for them
+    anyway)."""
     out: list[Term] = []
     for col, op, vals in terms:
-        try:
-            dtype = schema[col].dataType
-        except Exception:
+        if col not in schema.fieldNames():
             out.append((col, op, vals))
             continue
-        if not isinstance(
-            dtype, (T.TimestampType, T.TimestampNTZType, T.DateType)
-        ):
-            out.append((col, op, vals))
-            continue
-        canon = [canon_literal(v, dtype, tz) for v in vals]
-        # numeric literals probing a temporal column reach here as
-        # _MISSING — incomparable with the string bounds, drop the term
-        if all(c is not None and c is not _MISSING for c in canon):
+        canon = [canon_bound(v, schema[col].dataType, tz) for v in vals]
+        if all(c is not None for c in canon):
             out.append((col, op, canon))
     return out
+
+
+def _offset(s: str) -> bool:
+    """True for an ISO timestamp spelled with a UTC offset."""
+    return len(s) >= 25 and s[10] == "T" and s[-6] in "+-" and s[-3] == ":"
 
 
 def _comparable(v, bound) -> bool:
@@ -278,14 +254,22 @@ def _comparable(v, bound) -> bool:
         return False
     if isinstance(v, num) and isinstance(bound, num):
         return True
-    return isinstance(v, str) and isinstance(bound, str)
+    # a naive timestamp spelling never meets an offset one: it is a
+    # prefix of the instant it may equal, so it sorts below it
+    return (
+        isinstance(v, str) and isinstance(bound, str)
+        and _offset(v) == _offset(bound)
+    )
 
 
 def entry_excluded(stats: dict | None, terms: list[Term]) -> bool:
     """True iff some term PROVES the file holds no matching row — the
     recorded ``[min, max]`` is disjoint from the term's value set. NULL
     rows never satisfy a comparison, so excluding on non-null bounds is
-    sound regardless of the file's null count."""
+    sound regardless of the file's null count. The only comparison of a
+    manifest bound in the engine; a value or bound of another type or
+    spelling (a None bound, a string against a number, a naive against
+    an offset timestamp) skips the term."""
     if not stats:
         return False
     for col, op, vals in terms:
@@ -309,3 +293,104 @@ def entry_excluded(stats: dict | None, terms: list[Term]) -> bool:
         if op == "<=" and mn > v:
             return True
     return False
+
+
+def bloom_excluded(
+    root: str, e: dict, terms: list[Term], cache: dict[str, dict | None]
+) -> bool:
+    """True iff some equality/IN term's values are ALL provably absent
+    from the file per its bloom sidecar (lake/bloom.py; ``root`` is the
+    table path, ``cache`` maps sidecar paths to their parsed contents).
+    Fail-open on everything: no sidecar recorded, unreadable sidecar,
+    stale canary (pandas hash drift), no descriptor for the column,
+    uncoercible probe literal."""
+    rel = e.get("bloom")
+    if not rel:
+        return False
+    eq = [(c, vals) for c, op, vals in terms if op in ("=", "in")]
+    if not eq:
+        return False
+    from sqoop_spark.lake.bloom import might_contain, read_sidecar
+
+    if rel not in cache:
+        cache[rel] = read_sidecar(os.path.join(root, rel))
+    cols = cache[rel]
+    if not cols:
+        return False
+    for c, vals in eq:
+        desc = cols.get(c)
+        if desc and not any(might_contain(desc, v) for v in vals):
+            return True
+    return False
+
+
+def resolve_buckets(entries: list[dict]) -> set[int]:
+    """Buckets that genuinely need key-resolution: those holding
+    NON-tombstone delta files. A tombstone-only bucket reads as plain
+    base — compaction wrote its base files delete-applied, and a
+    retained tombstone's key can only re-enter the bucket through a new
+    delta (append_delta / the MoR merge flows), which puts the bucket
+    back in this set. Resolving a tombstone-only bucket is an identity
+    shuffle; at steady state (fully compacted MoR table with retained
+    tombstones) skipping it makes the logical read a PLAIN SCAN. (Blind
+    base-append of an already-live key into a merge table is undefined
+    on merge tables generally — it duplicates base keys — not a
+    tombstone-specific caveat.)"""
+    return {
+        e["bucket"]
+        for e in entries
+        if e.get("delta") and not e.get("tombstone")
+    }
+
+
+def select_files(
+    root: str,
+    entries: list[dict],
+    terms: list[Term],
+    keys: list[str],
+    order: str,
+    bucket: int | None = None,
+) -> list[dict]:
+    """The file entries a read filtered by ``terms`` (canonical, see
+    :func:`normalize_terms`) must open, from ``entries`` of the table at
+    ``root`` whose key columns are ``keys`` and whose newest-wins order
+    column is ``order``; only bucket ``bucket`` when given. The caller
+    resolves the result (``_state_of_entries``) and filters it by the
+    full predicate again. Three steps:
+
+    1. **Every bucket**: drop a file whose zone maps or blooms exclude
+       a *resolve-safe* term — one on a key column, or a ``>``/``>=`` on
+       the order column. Pruning by such a term cannot change what the
+       filtered resolve returns: a dropped file holds no row satisfying
+       the term, so a key's winner that satisfies the predicate stays,
+       and still wins among the kept rows; a key whose winner was
+       dropped either fails a key term with every row, or has only rows
+       at or below the order bound left, which the filter removes.
+       Delete and upsert markers carry their keys and order values, so
+       the argument holds in buckets with MoR deltas. A payload term or
+       an order-column upper bound is not safe there: a delta row's
+       values say nothing about the older base row it supersedes.
+    2. **Resolving buckets**: :func:`resolve_buckets` of the survivors.
+    3. **Plain buckets** (no surviving non-tombstone delta): prune the
+       files by every term, and drop the tombstones — the base files
+       are delete-applied, so the bucket reads as a plain scan."""
+    cache: dict[str, dict | None] = {}
+
+    def excluded(e: dict, ts: list[Term]) -> bool:
+        return entry_excluded(e.get("stats"), ts) or bloom_excluded(
+            root, e, ts, cache
+        )
+
+    safe = [
+        t for t in terms
+        if t[0] in keys or (t[0] == order and t[1] in (">", ">="))
+    ]
+    kept = [
+        e for e in entries
+        if (bucket is None or e["bucket"] == bucket) and not excluded(e, safe)
+    ]
+    rb = resolve_buckets(kept)
+    return [
+        e for e in kept
+        if e["bucket"] in rb or not (e.get("tombstone") or excluded(e, terms))
+    ]

@@ -53,26 +53,18 @@ from sqoop_spark.errors import (
     EngineError,
     IncompatibleSchemaError,
 )
+from sqoop_spark.lake.pruning import (
+    canon_bound,
+    json_stat,
+    normalize_terms,
+    parse_terms,
+    resolve_buckets,
+    select_files,
+)
 
 FORMAT_VERSION = 1
 _BUCKET_DIR_RE = re.compile(r"_bucket=(\d+)")
 _WAP_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
-
-
-def _json_stat(v):
-    """A zone-map bound in its JSON-comparable form, or None if the type
-    has no order-preserving JSON encoding (then no stat is recorded and
-    pruning fails open). ISO-8601 keeps timestamp ordering under string
-    comparison; bools/bytes/decimals are skipped."""
-    import datetime as _dt
-
-    if isinstance(v, bool):
-        return None
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, (_dt.datetime, _dt.date)):
-        return v.isoformat()
-    return None
 
 
 def _footer_column_stats(meta, wanted: list[str]) -> dict[str, list]:
@@ -98,7 +90,7 @@ def _footer_column_stats(meta, wanted: list[str]) -> dict[str, list]:
                 ok = False
                 break
             try:
-                mn, mx = _json_stat(st.min), _json_stat(st.max)
+                mn, mx = json_stat(st.min), json_stat(st.max)
             except pa.ArrowNotImplementedError:
                 # pyarrow cannot decode some logical types' bounds (e.g.
                 # decimal stored as INT64) — no stat, prune fails open
@@ -536,24 +528,8 @@ class LakeTable:
             entries = [e for e in entries if e["bucket"] in bs]
         return entries
 
-    @staticmethod
-    def _resolve_buckets(entries: list[dict]) -> set[int]:
-        """Buckets that genuinely need key-resolution: those holding
-        NON-tombstone delta files. A tombstone-only bucket reads as plain
-        base — compaction wrote its base files delete-applied, and a
-        retained tombstone's key can only re-enter the bucket through a new
-        delta (append_delta / the MoR merge flows), which puts the bucket
-        back in this set. Resolving a tombstone-only bucket is an identity
-        shuffle; at steady state (fully compacted MoR table with retained
-        tombstones) skipping it makes the logical read a PLAIN SCAN. (Blind
-        base-append of an already-live key into a merge table is undefined
-        on merge tables generally — it duplicates base keys — not a
-        tombstone-specific caveat.)"""
-        return {
-            e["bucket"]
-            for e in entries
-            if e.get("delta") and not e.get("tombstone")
-        }
+    # the MoR resolve set, shared with the file selection (lake/pruning.py)
+    _resolve_buckets = staticmethod(resolve_buckets)
 
     def read(self, version: int | None = None) -> DataFrame:
         """Logical table state (MoR deltas resolved when present —
@@ -575,46 +551,6 @@ class LakeTable:
         TIMESTAMP column in — what zone-map pruning must read it in too."""
         return self.spark.conf.get("spark.sql.session.timeZone")
 
-    def prune_entries(
-        self, entries: list[dict], column: str, lower=None, upper=None
-    ) -> list[dict]:
-        """Zone-map file skipping: keep only entries whose recorded
-        ``[min, max]`` for ``column`` can intersect the half-open watermark
-        interval ``(lower, upper]`` — the append-incremental contract
-        (check_col > last_value AND check_col <= MAX,
-        reference tool/ImportTool.java:316-333). Entries with no stat for
-        the column are kept (fail-open): absence of metadata must never
-        drop data. String watermarks probing a timestamp/date column are
-        canonicalized to the stored isoformat bound encoding (same rule
-        as scan — see lake/pruning.py); an unparseable one contributes
-        no bound (fail-open) while the caller's in-plan typed filter
-        still applies it."""
-
-        from sqoop_spark.lake.pruning import _MISSING, canon_literal
-
-        def _bound(v):
-            try:
-                dtype = self.schema()[column].dataType
-            except Exception:
-                return _json_stat(v)
-            jv = canon_literal(v, dtype, self._session_tz())
-            return _json_stat(v) if jv is _MISSING else jv
-
-        lo, hi = _bound(lower), _bound(upper)
-
-        def keep(e: dict) -> bool:
-            st = (e.get("stats") or {}).get(column)
-            if not st:
-                return True
-            mn, mx = st
-            if lo is not None and mx <= lo:
-                return False
-            if hi is not None and mn > hi:
-                return False
-            return True
-
-        return [e for e in entries if keep(e)]
-
     def read_since(
         self, column: str, last_value, upper=None, version: int | None = None
     ) -> DataFrame:
@@ -630,50 +566,53 @@ class LakeTable:
         merge tables every file spans the whole order range, so zone maps
         cannot prune there.)
 
-        Unmerged MoR deltas are handled at BUCKET granularity. When
-        ``column`` is the table's order column (the one newest-wins ranks
-        by), the lower bound is applied to the raw base and delta rows
-        BEFORE the resolve, and the files of delta buckets are zone-map
-        pruned by it too: a key whose newest row is above the watermark
+        The window is two terms, ``column > last_value`` and ``column <=
+        upper``, spelled for the zone maps by the one canonicalizer (a
+        string watermark on a TIMESTAMP column is read in the session
+        time zone; one Spark would cast to a number prunes nothing), and
+        the files come from the one selection of lake/pruning.py
+        (:func:`select_files`). Unmerged MoR deltas are handled at BUCKET
+        granularity. When ``column`` is the table's order column (the one
+        newest-wins ranks by), the lower bound prunes the files of delta
+        buckets too, and it is applied to their raw base and delta rows
+        BEFORE the resolve: a key whose newest row is above the watermark
         has that row win among the rows above it as well, and a key whose
         newest row is not above it has no row above it at all (ties keep
         both rows and go to ``_op`` descending; NULL orders sort last and
-        never pass). The upper bound
-        still applies after the resolve — a row above it may supersede an
-        older one below it — and prunes files only in delta-free buckets.
-        For any other column a delta file can rewrite or delete keys
-        anywhere in its bucket, so that bucket is key-resolved whole
-        before the filter — but ONLY that bucket. Delta-free buckets keep
-        the zone-map file skip in both cases, so a lagging compactor costs
+        never pass). The upper bound still applies after the resolve — a
+        row above it may supersede an older one below it — and prunes
+        files only in delta-free buckets. On any other column that is not
+        a key column, a delta file can rewrite or delete keys anywhere in
+        its bucket, so that bucket is key-resolved whole before the
+        filter — but ONLY that bucket. Delta-free buckets keep the
+        zone-map file skip in every case, so a lagging compactor costs
         O(delta buckets), not O(table). Retained tombstone files
         (compact's delete markers) don't count as unmerged deltas — their
         buckets' base files are already delete-applied (see
-        ``_resolve_buckets``, applied here to the pruned files), so the
-        steady-state compacted MoR table keeps full zone-map pruning."""
+        ``_resolve_buckets``), so the steady-state compacted MoR table
+        keeps full zone-map pruning."""
         from sqoop_spark.cdc.watermark import typed_lit
 
-        if column not in self.schema(version).fieldNames():
+        m = self.manifest(version)
+        schema = self.schema(m["version"])
+        if column not in schema.fieldNames():
             raise EngineError(f"read_since: no column {column!r} in table schema")
-        dtype = self.schema(version)[column].dataType
-        lower = F.lit(True)
+        dtype = schema[column].dataType
+        tz = self._session_tz()
+        lower, terms = F.lit(True), []
         if last_value is not None:
             lower = F.col(column) > typed_lit(last_value, dtype)
+            terms.append((column, ">", [canon_bound(last_value, dtype, tz)]))
         pred = lower
         if upper is not None:
             pred = lower & (F.col(column) <= typed_lit(upper, dtype))
-        entries = self._entries(version)
-        pushed = column == self.order_column
-        if pushed:
-            entries = self.prune_entries(entries, column, lower=last_value)
-        rb = self._resolve_buckets(entries)
-        entries = [e for e in entries if e["bucket"] in rb] + self.prune_entries(
-            [e for e in entries if e["bucket"] not in rb],
-            column,
-            lower=last_value,
-            upper=upper,
+            terms.append((column, "<=", [canon_bound(upper, dtype, tz)]))
+        order = self.order_column
+        files = select_files(
+            self.path, m["files"], terms, m["key_columns"], order
         )
         return self._state_of_entries(
-            entries, version, lower if pushed else None
+            files, version, lower if column == order else None
         ).filter(pred)
 
     def bucket_of(self, key: dict, version: int | None = None) -> int:
@@ -735,10 +674,12 @@ class LakeTable:
         self, key: dict, m: dict
     ) -> tuple[list[pa.Scalar], list[dict]]:
         """Key literals and the entries of manifest ``m`` a point read of
-        ``key`` must open: the key's ONE bucket, minus files whose key zone
-        maps or key blooms exclude it, minus tombstone files unless a
-        non-tombstone delta survives (then the bucket resolves, and a
-        retained delete marker takes part)."""
+        ``key`` must open: :func:`select_files` in the key's ONE bucket
+        with one ``=`` term per key column, spelled from the cast key (a
+        timestamp key as its UTC instant, like the footer bounds) — files
+        whose key zone maps or key blooms exclude the key drop, and
+        tombstone files drop unless a non-tombstone delta survives (then
+        the bucket resolves, and a retained delete marker takes part)."""
         keys = m["key_columns"]
         if set(key) != set(keys):
             raise EngineError(
@@ -747,46 +688,29 @@ class LakeTable:
         if any(v is None for v in key.values()):
             raise EngineError("lookup: NULL key values never match (keys are non-null)")
         bucket, lits = self._key_probe(key, m["version"])
-        # zone-map bounds from the cast key, decoded by pyarrow exactly as
-        # the footer stats were (a timestamp bound carries its UTC offset)
-        bounds = {c: _json_stat(lit.as_py()) for c, lit in zip(keys, lits)}
-
-        def keep(e: dict) -> bool:
-            for c, jv in bounds.items():
-                st = (e.get("stats") or {}).get(c)
-                if not st or jv is None:
-                    continue  # fail-open
-                mn, mx = st
-                if jv < mn or jv > mx:
-                    return False
-            return True
-
-        bloom_cache: dict[str, dict | None] = {}
-        key_terms = [(c, "=", [v]) for c, v in key.items()]
-        pruned = [
-            e
-            for e in m["files"]
-            if e["bucket"] == bucket
-            and keep(e)
-            and not self._bloom_excludes(e, key_terms, bloom_cache)
+        schema = self.schema(m["version"])
+        terms = [
+            (c, "=", [canon_bound(lit, schema[c].dataType)])
+            for c, lit in zip(keys, lits)
         ]
-        if not self._resolve_buckets(pruned):
-            pruned = [e for e in pruned if not e.get("tombstone")]
-        return lits, pruned
+        return lits, select_files(
+            self.path, m["files"], terms, keys, self.order_column, bucket
+        )
 
     def lookup(self, key: dict, version: int | None = None) -> DataFrame:
         """Point read of one key: rows of the logical state whose key
         columns equal ``key`` — O(1 bucket, few files), never O(table),
         and no Spark job.
 
-        Two prunes before any data IO (:meth:`lookup_entries`): the key
-        hashes to exactly ONE bucket (the Iceberg bucket-transform
-        partition prune), and within it the per-file key zone maps and
-        key blooms recorded at write time skip files that cannot contain
-        the value (conjunctive over every key column; fail-open where a
-        stat is absent). The driver then reads the surviving files with
-        pyarrow: key columns first, the other columns only from the row
-        groups that hold the key, mapped to the snapshot's schema by
+        Two prunes before any data IO (:meth:`lookup_entries`, the one
+        file selection of lake/pruning.py): the key hashes to exactly ONE
+        bucket (the Iceberg bucket-transform partition prune), and within
+        it the per-file key zone maps and key blooms recorded at write
+        time skip files that cannot contain the value (conjunctive over
+        every key column; fail-open where a stat is absent). The driver
+        then reads the surviving files with pyarrow: key columns first,
+        the other columns only from the row groups that hold the key,
+        mapped to the snapshot's schema by
         column id (:func:`_column_map`). When a non-tombstone delta
         survives, newest-wins resolves on the driver with the rule of
         :meth:`_resolve_winners` (highest order value, NULLs last, ties to
@@ -875,121 +799,52 @@ class LakeTable:
         manifest which of millions of files a needle query touches; the
         executors never see the rest.
 
-        Three prunes, each fail-open (see lake/pruning.py — an
+        The terms of the predicate go through the one file selection of
+        lake/pruning.py (:func:`select_files`), fail-open throughout — an
         unparseable term, a top-level OR/NOT, a missing stat or a type
-        mismatch simply prunes nothing; the predicate is always
-        re-applied in-plan, so pruning can only skip provably-empty
-        files, never change results):
+        mismatch simply prunes nothing; the predicate is always re-applied
+        in-plan, so pruning can only skip provably-empty files, never
+        change results:
 
         - **bucket**: equality terms covering EVERY key column hash to
           one bucket via the writer's own bucket expression;
         - **file**: a plain (delta-free) bucket's entries drop when a
           term's value set is disjoint from the file's recorded
           ``[min, max]`` (any stats column — key, order, or
-          ``stats_columns``/clustered extras);
-        - **delta bucket**: a bucket holding unmerged MoR deltas resolves
-          WHOLE or drops WHOLE — per-file pruning is unsound there for
-          non-key columns (a delta row's values say nothing about the
-          base row it deletes or supersedes, and payload-free tombstones
-          carry NULL non-keys), so only KEY-column terms may exclude it,
-          and only when every one of the bucket's files is excluded
-          (delete/upsert markers carry their keys, the same soundness
-          argument as ``lookup``).
+          ``stats_columns``/clustered extras) or, for ``=``/``IN``, from
+          its bloom;
+        - **delta bucket**: a bucket holding unmerged MoR deltas is
+          pruned file by file, but only by key-column terms and by
+          ``>``/``>=`` terms on the order column. A delta row's other
+          values say nothing about the base row it deletes or supersedes
+          (and payload-free tombstones carry NULL non-keys), and an upper
+          bound on the order column could drop the newer row that
+          supersedes a matching older one; the kept files resolve, and
+          the filter applies after the resolve.
 
         ``where`` may be a Column (no pruning — Spark still pushes the
         filter to the parquet readers) or a SQL string (pruned)."""
-        from sqoop_spark.lake.pruning import (
-            entry_excluded,
-            normalize_terms,
-            parse_terms,
-        )
-
         pred = F.expr(where) if isinstance(where, str) else where
-        entries = self._entries(version)
+        m = self.manifest(version)
+        keys = m["key_columns"]
         terms = (
             normalize_terms(
-                parse_terms(where), self.schema(version), self._session_tz()
+                parse_terms(where), self.schema(m["version"]), self._session_tz()
             )
             if isinstance(where, str)
             else []
         )
-        if terms:
-            eq = {c: v[0] for c, op, v in terms if op == "="}
-            if all(c in eq and eq[c] is not None for c in self.key_columns):
-                try:
-                    b = self.bucket_of(
-                        {c: eq[c] for c in self.key_columns}, version
-                    )
-                except Exception:
-                    b = None  # uncastable literal — fail open
-                if b is not None:
-                    entries = [e for e in entries if e["bucket"] == b]
-        rb = self._resolve_buckets(entries)
-        key_terms = [t for t in terms if t[0] in self.key_columns]
-        bloom_cache: dict[str, dict | None] = {}
-        plain = [
-            e
-            for e in entries
-            if e["bucket"] not in rb
-            and not e.get("tombstone")
-            and not entry_excluded(e.get("stats"), terms)
-            and not self._bloom_excludes(e, terms, bloom_cache)
-        ]
-        out = self._read_files(plain, version).filter(pred)
-        if rb:
-            by_bucket: dict[int, list[dict]] = {}
-            for e in entries:
-                if e["bucket"] in rb:
-                    by_bucket.setdefault(e["bucket"], []).append(e)
-            # a delta bucket drops only when EVERY file is excluded by a
-            # KEY term — via zone maps or (for equality/IN probes) the
-            # per-file key blooms delta files now carry; both prunes are
-            # sound because markers carry their keys
-            keep = {
-                b
-                for b, es in by_bucket.items()
-                if not all(
-                    entry_excluded(e.get("stats"), key_terms)
-                    or self._bloom_excludes(e, key_terms, bloom_cache)
-                    for e in es
-                )
-            }
-            if keep:
-                out = out.unionByName(
-                    self._read_state(version, keep).filter(pred)
-                )
-        return out
-
-    def _bloom_excludes(
-        self, e: dict, terms: list, cache: dict[str, dict | None]
-    ) -> bool:
-        """True iff some equality/IN term's values are ALL provably absent
-        from the file per its bloom sidecar (lake/bloom.py). Fail-open on
-        everything: no sidecar recorded, unreadable sidecar, stale canary
-        (pandas hash drift), no descriptor for the column, uncoercible
-        probe literal."""
-        rel = e.get("bloom")
-        if not rel:
-            return False
-        eq = [(c, vals) for c, op, vals in terms if op in ("=", "in")]
-        if not eq:
-            return False
-        if rel not in cache:
-            from sqoop_spark.lake.bloom import read_sidecar
-
-            cache[rel] = read_sidecar(os.path.join(self.path, rel))
-        cols = cache[rel]
-        if not cols:
-            return False
-        from sqoop_spark.lake.bloom import might_contain
-
-        for c, vals in eq:
-            desc = cols.get(c)
-            if not desc:
-                continue
-            if not any(might_contain(desc, v) for v in vals):
-                return True
-        return False
+        eq = {c: v[0] for c, op, v in terms if op == "="}
+        bucket = None
+        if all(c in eq for c in keys):
+            try:
+                bucket = self.bucket_of({c: eq[c] for c in keys}, version)
+            except Exception:
+                pass  # uncastable literal — fail open
+        files = select_files(
+            self.path, m["files"], terms, keys, self.order_column, bucket
+        )
+        return self._state_of_entries(files, version).filter(pred)
 
     def _read_state(self, version: int | None, buckets: set[int] | None) -> DataFrame:
         """Logical state of ``version`` restricted to ``buckets`` (all when

@@ -10,8 +10,10 @@ untouched, final state is byte-identical to the full-bucket rewrite,
 counters stay exact, and delta-bearing buckets never carry.
 """
 
+import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import types as T
 
 from sqoop_spark.cdc.merge import MergeMode, merge_apply
@@ -87,16 +89,27 @@ def test_file_skip_carries_disjoint_files(spark, scratch):
     assert c["rows_carried_by_file_skip"] > 0
 
 
+def _unclustered_table(spark, scratch, name, n=400):
+    """The twin of :func:`_clustered_table` with the same rows left as
+    appended: one file per bucket, spanning every key of the bucket."""
+    t = _table(spark, scratch, name)
+    t.append(spark.createDataFrame([(k, k, f"v{k}") for k in range(n)], SCHEMA))
+    return t
+
+
 def test_file_skip_matches_full_rewrite(spark, scratch):
-    """file_granular=False twin: identical final state, zero carried files."""
+    """An unclustered twin, whose one file per bucket spans the batch's key
+    range so that nothing carries: identical final state and counters."""
     rows = [(k, 2000 + k, f"u{k}", "upsert") for k in range(10, 20)]
     rows.append((42, 2042, None, "delete"))
     batch = spark.createDataFrame(rows, BATCH_SCHEMA)
 
     t_skip = _clustered_table(spark, scratch, "fs2a")
-    t_full = _clustered_table(spark, scratch, "fs2b")
-    merge_apply(t_skip, batch, batch_id=1, order_col="seq", file_granular=True)
-    merge_apply(t_full, batch, batch_id=1, order_col="seq", file_granular=False)
+    t_full = _unclustered_table(spark, scratch, "fs2b")
+    pre_full = _paths(t_full)
+    assert len({e["bucket"] for e in t_full.manifest()["files"]}) == len(pre_full)
+    merge_apply(t_skip, batch, batch_id=1, order_col="seq")
+    merge_apply(t_full, batch, batch_id=1, order_col="seq")
 
     assert _state(t_skip) == _state(t_full)
     c_full = t_full.manifest()["lineage"]["counters"]
@@ -105,7 +118,7 @@ def test_file_skip_matches_full_rewrite(spark, scratch):
     assert c_skip["files_carried"] > 0
     # Full rewrite keeps NO pre-merge files in affected buckets; with two
     # buckets and ≥10 spread keys both buckets are affected, so none survive.
-    assert not (_paths(t_full, 2) & _paths(t_full))
+    assert not (pre_full & _paths(t_full))
     # Counter totals agree between the two strategies.
     for key in ("carried", "updated", "inserted", "deleted", "old_rows_touched"):
         assert c_skip[key] == c_full[key], key
@@ -274,3 +287,66 @@ def test_delete_where_in_delta_bucket_full_rewrite(spark, scratch):
     assert not (pre & post), "delta bucket must fully rewrite"
     assert mor_key not in _state(t)
     assert m["summary"]["rows_deleted"] == 1
+
+
+TS_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.TimestampType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("v", T.StringType()),
+    ]
+)
+TS_BATCH = T.StructType(TS_SCHEMA.fields + [T.StructField("op", T.StringType())])
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_timestamp_key_carry_keeps_keys_unique(spark, scratch, tz):
+    """On a TIMESTAMP-keyed table, a batch that updates one file's min key
+    and another file's max key must rewrite both files: the batch's key
+    range and the footer bounds name the same instants, whatever the
+    session time zone. A batch bound spelled without the bounds' UTC
+    offset sorts below an equal min bound, the file holding the key is
+    carried, and the merge inserts the key a second time."""
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        base = dt.datetime(2024, 6, 1, tzinfo=dt.timezone.utc)
+        rows = [(base + dt.timedelta(hours=i), i, f"v{i}") for i in range(200)]
+
+        def make(name, cluster):
+            t = LakeTable.create(
+                spark, os.path.join(scratch, name), TS_SCHEMA, ["k"],
+                num_buckets=2, properties={"order_column": "seq"},
+            )
+            t.append(spark.createDataFrame(rows, TS_SCHEMA))
+            if cluster:
+                t.rewrite_clustered(column="k", target_rows=25)
+            return t
+
+        t, twin = make("ts_clustered", True), make("ts_twin", False)
+        files = t.manifest()["files"]
+        assert len(twin.manifest()["files"]) == 2  # one file per bucket
+        by_bucket = {
+            b: sorted((e for e in files if e["bucket"] == b),
+                      key=lambda e: e["stats"]["k"][0])
+            for b in (0, 1)
+        }
+        assert all(len(fs) >= 3 for fs in by_bucket.values())
+        # the min key of a middle file of bucket 0, the max key of one of
+        # bucket 1
+        lo_key = dt.datetime.fromisoformat(by_bucket[0][1]["stats"]["k"][0])
+        hi_key = dt.datetime.fromisoformat(by_bucket[1][1]["stats"]["k"][1])
+        batch = spark.createDataFrame(
+            [(lo_key, 1000, "lo", "upsert"), (hi_key, 1001, "hi", "upsert")],
+            TS_BATCH,
+        )
+        for table in (t, twin):
+            stats = merge_apply(table, batch, batch_id=1, order_col="seq")
+            assert (stats.updated, stats.inserted, stats.deleted) == (2, 0, 0)
+        got = sorted(map(tuple, t.read().collect()))
+        assert len({r[0] for r in got}) == len(got) == 200
+        assert got == sorted(map(tuple, twin.read().collect()))
+        assert t.manifest()["lineage"]["counters"]["files_carried"] > 0
+        assert twin.manifest()["lineage"]["counters"]["files_carried"] == 0
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)

@@ -8,6 +8,7 @@ from pyspark.sql import types as T
 
 from sqoop_spark.errors import EngineError, IncompatibleSchemaError
 from sqoop_spark.lake import LakeTable
+from sqoop_spark.lake.pruning import select_files
 
 SCHEMA = T.StructType(
     [
@@ -206,7 +207,7 @@ def test_zone_map_stats_and_read_since(spark, scratch):
         mn, mx = e["stats"]["seq"]
         assert 0 <= mn <= mx <= 29
 
-    pruned = t.prune_entries(entries, "seq", lower=19)
+    pruned = [e for e in entries if e["stats"]["seq"][1] > 19]
     assert pruned, "watermark 19 must keep the last commit's files"
     assert len(pruned) < len(entries), "files wholly below the watermark skip"
     assert all(e["stats"]["seq"][1] > 19 for e in pruned)
@@ -219,6 +220,38 @@ def test_zone_map_stats_and_read_since(spark, scratch):
     # upper-bounded window (the append-slice contract: > lo AND <= hi)
     got2 = sorted(r["seq"] for r in t.read_since("seq", 9, upper=19).collect())
     assert got2 == list(range(10, 20))
+
+
+def test_read_since_string_watermark_on_bigint_order_column(spark, scratch):
+    """A string watermark on a bigint order column is cast by Spark, as in
+    ``read().filter("seq > '5'")``; the zone-map prune must not compare
+    it uncast with the integer bounds (that raised TypeError)."""
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("seq", T.LongType())]
+    )
+    t = LakeTable.create(
+        spark, f"{scratch}/zstr", schema, ["k"], num_buckets=2,
+        properties={"order_column": "seq"},
+    )
+    for lo in (0, 5):
+        t.append(spark.createDataFrame(
+            [(lo + i, lo + i) for i in range(5)], schema
+        ))
+    t.append_delta(spark.createDataFrame(
+        [(1, 20, "upsert"), (7, 21, "delete")],
+        T.StructType(schema.fields + [T.StructField("op", T.StringType())]),
+    ))
+    for lo, upper in [("5", None), ("5", "9"), (None, "4")]:
+        want = t.read()
+        if lo is not None:
+            want = want.filter(f"seq > '{lo}'")
+        if upper is not None:
+            want = want.filter(f"seq <= '{upper}'")
+        got = t.read_since("seq", lo, upper)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, want.collect())
+        ), (lo, upper)
+    assert t.read_since("seq", "5").count() == 4
 
 
 def test_prune_entries_fail_open_without_stats(spark, scratch):
@@ -235,7 +268,8 @@ def test_prune_entries_fail_open_without_stats(spark, scratch):
     entries = [dict(e) for e in t.manifest()["files"]]
     for e in entries:
         e.pop("stats", None)
-    assert t.prune_entries(entries, "seq", lower=10**9) == entries
+    terms = [("seq", ">", [10**9]), ("k", "=", [10**9])]
+    assert select_files(t.path, entries, terms, ["k"], "seq") == entries
 
 
 def test_read_since_mor_fallback(spark, scratch):
@@ -307,7 +341,7 @@ def test_read_since_mor_bucket_granular(spark, scratch):
     assert any(e.get("delta") for e in above0)
     assert len(above0) < sum(e["bucket"] == 0 for e in entries)
     clean1 = [e for e in entries if e["bucket"] == 1]
-    pruned1 = t.prune_entries(clean1, "seq", lower=19)
+    pruned1 = [e for e in clean1 if e["stats"]["seq"][1] > 19]
     assert len(pruned1) < len(clean1), "clean bucket must still zone-map-prune"
 
     since = t.read_since("seq", 19)

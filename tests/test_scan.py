@@ -3,10 +3,12 @@
 ``LakeTable.scan(where)`` must ALWAYS equal ``read().filter(where)`` —
 pruning only skips files provably empty for the predicate — and, on a
 clustered table, must open strictly fewer files than a full read. The
-delta-bucket cases pin the soundness rules: non-key terms never prune a
-bucket holding unmerged MoR deltas (a delta can delete/supersede a base
-row whose values the delta's own stats say nothing about), while
-key-column terms may drop the whole bucket (markers carry their keys).
+delta-bucket cases pin the soundness rules: a bucket holding unmerged
+MoR deltas is pruned file by file, but only by key-column terms (markers
+carry their keys) and by order-column lower bounds — non-key terms never
+prune its files (a delta can delete/supersede a base row whose values
+the delta's own stats say nothing about). A key term that excludes every
+file of a delta bucket drops the bucket.
 """
 
 import os
@@ -91,6 +93,21 @@ def test_entry_excluded_rules():
     assert not entry_excluded(st, [("k", "=", ["5"])])
     assert not entry_excluded(st, [("other", "=", [1])])
     assert not entry_excluded(None, [("k", "=", [5])])
+    # a None bound (a decimal key: no JSON encoding) or value fails open
+    assert not entry_excluded({"d": [None, None]}, [("d", "=", [5])])
+    assert not entry_excluded({"d": [None, 3]}, [("d", ">", [5])])
+    assert not entry_excluded(st, [("k", "=", [None])])
+    # a naive timestamp spelling never compares with an offset bound (it
+    # is a prefix of the instant it may equal); one spelling does
+    ts = {"ts": ["2024-06-01T00:00:00+00:00", "2024-06-01T05:00:00+00:00"]}
+    assert not entry_excluded(ts, [("ts", "<=", ["2024-06-01T00:00:00"])])
+    assert not entry_excluded(ts, [("ts", ">", ["2024-06-01T06:00:00"])])
+    assert not entry_excluded(ts, [("ts", "<=", ["2024-06-01T00:00:00+00:00"])])
+    assert entry_excluded(ts, [("ts", "<", ["2024-06-01T00:00:00+00:00"])])
+    assert entry_excluded(ts, [("ts", ">", ["2024-06-01T05:00:00+00:00"])])
+    ntz = {"ts": ["2024-06-01T00:00:00", "2024-06-01T05:00:00.250000"]}
+    assert entry_excluded(ntz, [("ts", ">=", ["2024-06-01T05:00:01"])])
+    assert not entry_excluded(ntz, [("ts", "=", ["2024-06-01T05:00:00+00:00"])])
 
 
 # ------------------------------------------------------------ scan values
@@ -136,9 +153,9 @@ def test_scan_full_key_equality_prunes_to_one_bucket(spark, scratch):
 
 
 def test_scan_column_filter_never_prunes_delta_bucket(spark, scratch):
-    """Deleting k=5 via an unmerged MoR delta whose own stats are far from
-    the scan predicate must still suppress the base row: the delta bucket
-    resolves whole, never per-file."""
+    """Deleting k=5 via an unmerged MoR delta must still suppress the base
+    row: the delta bucket's files are pruned only by the key term, and the
+    kept files resolve before the filter."""
     t = _clustered(spark, scratch, "scd")
     merge_apply(
         t,
@@ -320,7 +337,7 @@ def test_scan_timestamp_string_literal_sound(spark, scratch):
     total = len(t.manifest()["files"])
     assert len(t.scan("ts < '2024-06-02 00:00:00'").inputFiles()) < total
     # read_since with a STRING timestamp watermark: same canonicalization
-    # (prune_entries), same soundness + pruning
+    # and file selection, same soundness + pruning
     since = t.read_since("ts", "2024-06-05 23:00:00")
     want = sorted(
         r.k for r in t.read().filter("ts > '2024-06-05 23:00:00'").collect()
