@@ -37,6 +37,18 @@ from sqoop_spark.errors import (
 
 __version__ = "0.1.0"
 
+
+def _install_worker_patches() -> None:
+    from pyspark.taskcontext import TaskContext
+
+    if TaskContext.get() is not None:  # inside a Python worker task
+        from sqoop_spark import _worker
+
+        _worker.install()
+
+
+_install_worker_patches()
+
 __all__ = [
     "EngineError",
     "IncompatibleSchemaError",

@@ -347,15 +347,17 @@ class LakeTable:
     def num_buckets(self) -> int:
         return self.manifest()["num_buckets"]
 
-    def bucket_expr(self) -> F.Column:
+    def bucket_expr(self, keys: list[F.Column] | None = None) -> F.Column:
         """Deterministic bucket of the merge key: pmod(xxhash64(keys), B).
+        ``keys`` replaces the key columns (in key order) with expressions.
 
         The Spark-native analog of the reference's split-by partitioning
         (mapreduce/db/DataDrivenDBInputFormat.java:140-254): instead of
         lexicographic ranges over text keys (TextSplitter.java:39-251, which
         skews on hot prefixes), keys are hash-distributed.
         """
-        keys = [F.col(c) for c in self.key_columns]
+        if keys is None:
+            keys = [F.col(c) for c in self.key_columns]
         return F.pmod(F.xxhash64(*keys), F.lit(self.num_buckets)).cast("int")
 
     # -- fencing ---------------------------------------------------------------
@@ -1276,18 +1278,27 @@ class LakeTable:
             return list(pool.map(entry, found))
 
     def _prepare_df(self, df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
+        """One projection to the table's columns, ``extra_cols`` and
+        ``_bucket``: a column already of the table type is selected as it
+        is, any other is cast, and the bucket hashes the typed keys."""
         schema = self.schema()
-        names = schema.fieldNames()
-        missing = [n for n in names if n not in df.columns]
+        have = {f.name: f.dataType for f in df.schema.fields}
+        missing = [n for n in schema.fieldNames() if n not in have]
         if missing:
             raise EngineError(f"input missing table columns: {missing}")
-        cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        for c in extra_cols:
-            cols.append(F.col(c))
-        if "_bucket" in df.columns:
+        typed = {
+            f.name: F.col(f.name)
+            if have[f.name] == f.dataType
+            else F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        }
+        cols = [*typed.values(), *(F.col(c) for c in extra_cols)]
+        if "_bucket" in have:
             cols.append(F.col("_bucket").cast("int"))
-            return df.select(*cols)
-        return df.select(*cols).withColumn("_bucket", self.bucket_expr())
+        else:
+            keys = [typed[k] for k in self.key_columns]
+            cols.append(self.bucket_expr(keys).alias("_bucket"))
+        return df.select(*cols)
 
     def _commit(
         self,

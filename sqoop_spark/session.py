@@ -3,6 +3,17 @@
 Defaults are chosen for scale-out behavior (AQE on, skew-join on, Arrow on)
 so the same code path that runs on local[N] in tests would run unchanged on a
 multi-executor cluster via ``spark-submit --py-files``.
+
+DataFrame call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on, every
+``F.col``, ``cast``, ``alias`` and DataFrame call goes through PySpark's
+``_with_origin`` wrapper, which adds py4j round trips per call (the active
+session, a ``conf.get`` of the stack-trace depth, and setting and clearing
+the JVM-side origin); that was more than half of the round trips of a small
+CDC exec. The cost: an analysis error's message no longer carries the
+fragment naming the Python file and line of the offending call. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`` to
+get the call sites back; the setting is read once per Python process.
 """
 
 from __future__ import annotations
@@ -52,6 +63,8 @@ def build_session(
         # every timestamp column) and are forbidden by the Iceberg spec.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        # no Python call-site capture per Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if hive_metastore:
         d = os.path.abspath(hive_metastore)

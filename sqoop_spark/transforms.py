@@ -35,7 +35,7 @@ HIVE_DELIMS = "\n\r\x01"
 
 # pandas UDFs are built lazily: pandas_udf() needs an active SparkSession to
 # parse the return type, so decorating at import time breaks library import.
-_UDF_CACHE: dict[str, object] = {}
+_UDF_CACHE: dict[object, object] = {}
 
 
 def _sha256_impl(s: pd.Series) -> pd.Series:
@@ -61,7 +61,7 @@ def make_normalize_udf(
     delim_replacement: str | None = None,
     normalize_newlines: bool = False,
 ):
-    """Build the content-normalization pandas UDF.
+    """The content-normalization pandas UDF, built once per argument tuple.
 
     Semantics (in order):
       1. NULL → ``null_string`` literal (§1.3 null encoding),
@@ -71,6 +71,9 @@ def make_normalize_udf(
     """
     if drop_delims and delim_replacement is not None:
         raise ValueError("drop_delims and delim_replacement are mutually exclusive")
+    key = ("normalize", null_string, drop_delims, delim_replacement, normalize_newlines)
+    if key in _UDF_CACHE:
+        return _UDF_CACHE[key]
     table = None
     if drop_delims:
         table = str.maketrans("", "", HIVE_DELIMS)
@@ -85,7 +88,8 @@ def make_normalize_udf(
             out = out.str.translate(table)
         return out.fillna(null_string)
 
-    return pandas_udf(normalize, "string")
+    _UDF_CACHE[key] = pandas_udf(normalize, "string")
+    return _UDF_CACHE[key]
 
 
 def fingerprint_content(
